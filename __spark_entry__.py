@@ -13,6 +13,8 @@ pytest suite holds the strong P/R >= 0.95 gate for those).
 
 from __future__ import annotations
 
+import functools
+import logging
 import os
 from collections.abc import Callable
 
@@ -37,6 +39,7 @@ def _q(name: str, sql: str | None = None):
 
 
 _FANOUT_CAP_BYTES = 64 << 20
+_log = logging.getLogger(__name__)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -68,24 +71,33 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     cores — is returned untouched."""
     path = f"{sf_dir}/{name}.parquet"
     df = spark.read.parquet(path)
+    parallelism = spark.sparkContext.defaultParallelism
     try:
         if os.path.isfile(path):
-            files, n_files = [path], 1
+            files = [path]
         else:
             files = [os.path.join(path, f)
                      for f in os.listdir(path) if f.endswith(".parquet")]
-            n_files = len(files)
         size = sum(os.path.getsize(f) for f in files)
+        # <=64 MB and fewer (128 MB-bound) splits than cores; only then
+        # are the footers read, for the row width
+        if size > _FANOUT_CAP_BYTES or len(files) >= parallelism:
+            return df
         import pyarrow.parquet as pq
         n_rows = sum(pq.ParquetFile(f).metadata.num_rows for f in files)
-    except Exception:
+    except (OSError, ImportError) as e:
+        _no_fanout(type(e).__name__)
         return df
-    parallelism = spark.sparkContext.defaultParallelism
-    # <=64 MB, fewer (128 MB-bound) splits than cores, wide rows
-    if (size <= _FANOUT_CAP_BYTES and n_files < parallelism
-            and n_rows > 0 and size / n_rows >= 64):
+    if n_rows > 0 and size / n_rows >= 64:
         df = df.repartition(parallelism)
     return df
+
+
+@functools.cache
+def _no_fanout(reason: str) -> None:
+    """Log, once per kind of failure, that ``_t`` skipped the fan-out."""
+    _log.warning("_t: input fan-out off (%s): cannot size the table on "
+                 "the driver's local filesystem", reason)
 
 
 # --------------------------------------------------------------------------
@@ -786,7 +798,7 @@ def print_golden_digests() -> None:
     """Recompute and print the _GOLDEN_DIGESTS values (run after an
     intentional semantic change to the pipeline or parse)."""
     from tecs_hardware_kbc_spark.session import get_spark
-    spark = get_spark(master="local[16]", shuffle_partitions=16)
+    spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
     from tecs_hardware_kbc_spark.pipeline import run_kbc
     from tecs_hardware_kbc_spark.operators.extract import parse_pages

@@ -29,21 +29,7 @@ import math
 from pyspark.sql import Column
 import pyspark.sql.functions as F
 
-
-def _let(val: Column, body) -> Column:
-    """Expression-level ``let``: evaluate ``val`` ONCE per row and bind it
-    as a lambda variable in ``body``.
-
-    Spark evaluates non-lambda-variable subexpressions captured inside a
-    higher-order-function lambda PER ARRAY ELEMENT (there is no
-    subexpression cache across lambda invocations). Any transform that
-    reads its input array through ``element_at`` inside a lambda — i.e.
-    every geometric permutation here — would therefore re-evaluate a
-    *composed* input expression n times per row: O(n²) per image for a
-    chained policy. Binding the input through a 1-element array transform
-    makes it a lambda VARIABLE, which is a cheap per-element slot read.
-    Catalyst still fuses the whole chain into one projection."""
-    return F.element_at(F.transform(F.array(val), body), 1)
+from tecs_hardware_kbc_spark.functions.columns import let
 
 
 def _idx(w: Column, h: Column):
@@ -61,7 +47,7 @@ def _permute(pixels: Column, w: Column, h: Column, src,
     throws on bad indices). Output dims default to the input dims."""
     ow = out_w if out_w is not None else w
     oh = out_h if out_h is not None else h
-    return _let(pixels, lambda px: F.transform(
+    return let(pixels, lambda px: F.transform(
         _idx(ow, oh),
         lambda i: F.element_at(
             px, (src(F.floor(i / ow).cast("int"), i % ow) + 1).cast("int")
@@ -103,7 +89,7 @@ def cutout(pixels: Column, w: Column, h: Column,
            fill: float = 0.0) -> Column:
     """Zero (or ``fill``) a size x size square at (x0, y0)
     (transforms/cutout.py)."""
-    return _let(pixels, lambda px: F.transform(
+    return let(pixels, lambda px: F.transform(
         _idx(w, h),
         lambda i: F.when(
             (F.floor(i / w) >= y0) & (F.floor(i / w) < y0 + size)
@@ -127,7 +113,7 @@ def contrast(pixels: Column, factor: Column) -> Column:
     per image, not once per pixel."""
     mean = F.aggregate(pixels, F.lit(0.0), lambda a, p: a + p) \
         / F.size(pixels)
-    return _let(mean, lambda m: F.transform(
+    return let(mean, lambda m: F.transform(
         pixels,
         lambda p: F.least(
             F.greatest(m + factor * (p - m), F.lit(0.0)), F.lit(1.0))))
@@ -167,8 +153,8 @@ def _fetch2d(px: Column, w: Column, h: Column, sr, sc,
 def _affine(pixels: Column, w: Column, h: Column, sr, sc,
             fill: float = 0.0) -> Column:
     """Output (r, c) reads input (sr(r, c), sc(r, c)), 0-filled outside —
-    the kernel for shear/translate/rotate. Input is let-bound (see _let)."""
-    return _let(pixels, lambda px: F.transform(
+    the kernel for shear/translate/rotate. Input is let-bound (see let)."""
+    return let(pixels, lambda px: F.transform(
         _idx(w, h),
         lambda i: _fetch2d(
             px, w, h,
@@ -260,7 +246,7 @@ def resize_bilinear(pixels: Column, w: Column, h: Column,
         fx = F.greatest(F.least(sx - x0, F.lit(1.0)), F.lit(0.0))
         return y0, x0, y1, x1, fy, fx
 
-    return _let(pixels, lambda px: F.transform(
+    return let(pixels, lambda px: F.transform(
         _idx(ow, oh),
         lambda i: _bilerp(px, w,
                           *src(F.floor(i / ow).cast("int"), i % ow))))
@@ -281,7 +267,7 @@ def pad(pixels: Column, w: Column, h: Column, p: Column,
     'constant' (fill) and 'reflect' (mirror WITHOUT repeating the edge:
     source index -1 -> 1, period 2n-2)."""
     if mode == "constant":
-        return _let(pixels, lambda px: F.transform(
+        return let(pixels, lambda px: F.transform(
             _idx(w + 2 * p, h + 2 * p),
             lambda i: _fetch2d(
                 px, w, h,
@@ -298,7 +284,7 @@ def pad(pixels: Column, w: Column, h: Column, p: Column,
         return F.when(n <= 1, F.lit(0)) \
                 .otherwise(F.when(m < n, m).otherwise(2 * n - 2 - m))
 
-    return _let(pixels, lambda px: F.transform(
+    return let(pixels, lambda px: F.transform(
         _idx(w + 2 * p, h + 2 * p),
         lambda i: F.element_at(
             px,
@@ -341,7 +327,7 @@ def auto_contrast(pixels: Column) -> Column:
     min/max are let-bound — computed once per image."""
     lohi = F.struct(F.array_min(pixels).alias("lo"),
                     F.array_max(pixels).alias("hi"))
-    return _let(lohi, lambda s: F.transform(
+    return let(lohi, lambda s: F.transform(
         pixels,
         lambda p: F.when(s["hi"] > s["lo"],
                          (p - s["lo"]) / (s["hi"] - s["lo"])).otherwise(p)))
@@ -364,7 +350,7 @@ def equalize(pixels: Column) -> Column:
     env = F.struct(cdf.alias("cdf"),
                    F.size(pixels).alias("n"),
                    _q(F.array_min(pixels)).alias("qmin"))
-    return _let(env, lambda e: F.transform(
+    return let(env, lambda e: F.transform(
         pixels,
         lambda p: F.when(
             e["n"] > F.element_at(e["cdf"], e["qmin"] + 1),
@@ -487,9 +473,9 @@ def mixup(images, *, key_col: str = "img_id", label_col: str = "label",
     mixed = tagged.select(
         "key", "label", "lam", "_px", partner.alias("_partner"))
     # let-bind lam so a collapsed projection can't inline its md5/pow
-    # tree into the per-element lambda (see _let)
+    # tree into the per-element lambda (see let)
     env = F.struct(F.col("lam").alias("l"))
-    pix = _let(env, lambda e: F.zip_with(
+    pix = let(env, lambda e: F.zip_with(
         "_px", "_partner.px",
         lambda a, b: e["l"] * a + (F.lit(1.0) - e["l"]) * b))
     return mixed.select(

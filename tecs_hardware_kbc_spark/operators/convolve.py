@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 import pyspark.sql.functions as F
 
-from tecs_hardware_kbc_spark.operators.augment import (
-    _fetch2d, _idx, _let)
+from tecs_hardware_kbc_spark.functions.columns import let
+from tecs_hardware_kbc_spark.operators.augment import _fetch2d, _idx
 
 # 3x3 kernel bank (row-major). Sobel-x/y respond to oriented edges —
 # their IMBALANCE separates striped/elongated structure from isotropic
@@ -66,8 +66,8 @@ def conv3x3(pixels: Column, w: Column, h: Column, kernel: list[float],
             (r == 0) | (r == h - 1) | (c == 0) | (c == w - 1),
             F.element_at(px, (i + 1).cast("int"))).otherwise(inner)
 
-    return _let(pixels, lambda px: F.transform(_idx(w, h),
-                                               lambda i: out(px, i)))
+    return let(pixels, lambda px: F.transform(_idx(w, h),
+                                              lambda i: out(px, i)))
 
 
 def mean_abs(resp: Column) -> Column:

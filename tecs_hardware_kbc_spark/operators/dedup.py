@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from tecs_hardware_kbc_spark.functions.columns import let
+
 
 def norm_text(col) -> Column:
     """Dedup normalization: lowercase + whitespace collapse + trim."""
@@ -159,15 +161,13 @@ def duplicate_span_starts(docs: DataFrame, id_col: str = "doc_id",
     spans (boilerplate repeated millions of times) collapse at the
     window like paragraph_dedup's — never a join explosion.
 
-    The words array is ``_let``-bound before the rolling window: a raw
+    The words array is ``let``-bound before the rolling window: a raw
     ``F.slice(words, ...)`` capture inside the transform lambda would
     re-evaluate the full split+normalize chain once PER SPAN START
     (Spark has no subexpression cache across lambda invocations),
     turning the fingerprint pass O(L^2) per document — measured 8.6x
     slower at sf1.0 (47.9s -> 5.6s query wall after the fix)."""
     from pyspark.sql import Window
-
-    from tecs_hardware_kbc_spark.operators.augment import _let
 
     def _fps(ws):
         starts = F.when(
@@ -181,7 +181,7 @@ def duplicate_span_starts(docs: DataFrame, id_col: str = "doc_id",
                 F.md5(F.array_join(F.slice(ws, s + 1, span_words), " "))
                 .alias("fp")))
 
-    span_fps = _let(F.split(norm_text(F.col(text_col)), " "), _fps)
+    span_fps = let(F.split(norm_text(F.col(text_col)), " "), _fps)
     occ = docs.select(
         F.col(id_col).alias("doc_id"), F.explode(span_fps).alias("sp")
     ).select("doc_id", F.col("sp.start").alias("start"),
@@ -287,25 +287,24 @@ def minhash_signatures_arr(docs: DataFrame, id_col: str = "doc_id",
     per-distinct-shingle hashing), but the plan has ZERO shuffles before
     the banding join where the vocab path has three (shingle
     dropDuplicates, vocab distinct, shingle-vocab join). Measured 50k
-    docs / 32c: 6.2s vs 38-48s. Every captured array is ``_let``-bound —
+    docs / 32c: 6.2s vs 38-48s. Every captured array is ``let``-bound —
     without it the HOF-recapture trap makes this path O(L^2) per row and
-    8x SLOWER (measured 50s), see augment._let.
+    8x SLOWER (measured 50s), see functions.columns.let.
 
     Prefer this path by default; the vocab-join variant
     (``minhash_signatures``) stays for boilerplate-heavy corpora where
     shingles repeat enough across documents that hashing once per
     distinct shingle beats hashing per occurrence."""
-    from tecs_hardware_kbc_spark.operators.augment import _let
 
     def build(words):
         idx = F.sequence(F.lit(0), F.greatest(F.size(words) - n, F.lit(0)))
         grams = F.array_distinct(F.transform(
             idx, lambda i: F.array_join(F.slice(words, i + 1, n), " ")))
-        return _let(grams, lambda sh: F.array(
+        return let(grams, lambda sh: F.array(
             *[F.array_min(F.transform(sh, lambda s: md5_u32(s, seed=i)))
               for i in range(num_hashes)]))
 
-    sig = _let(F.split(norm_text(F.col(text_col)), " "), build)
+    sig = let(F.split(norm_text(F.col(text_col)), " "), build)
     return docs.select(F.col(id_col).alias("doc_id"), sig.alias("sig"))
 
 
@@ -396,9 +395,8 @@ def lsh_candidate_pairs(signatures: DataFrame, bands: int = 4,
                 .otherwise(x["sig"]).alias("sig_b"))),
             lambda p: p["a"] != p["b"])))
 
-    from tecs_hardware_kbc_spark.operators.augment import _let
     small = (bucketed.filter(F.size("ds") <= bucket_cap)
-             .select(F.explode(_let(F.col("ds"), pairs_of)).alias("p"))
+             .select(F.explode(let(F.col("ds"), pairs_of)).alias("p"))
              .select("p.a", "p.b", "p.sig_a", "p.sig_b"))
 
     hot = (bucketed.filter(F.size("ds") > bucket_cap)

@@ -49,6 +49,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from tecs_hardware_kbc_spark.functions.columns import let
+
 from tecs_hardware_kbc_spark.operators.urls import (
     canonicalize_url, url_host)
 
@@ -106,7 +108,6 @@ def extract_links(pages: DataFrame, url_col: str = "url",
     endpoints are canonicalized, so the node space matches
     ``urls.canonicalize_url`` keys used everywhere else in the crawl
     loop."""
-    from tecs_hardware_kbc_spark.operators.augment import _let
 
     raw = pages.select(
         canonicalize_url(F.col(url_col)).alias("src"),
@@ -114,7 +115,7 @@ def extract_links(pages: DataFrame, url_col: str = "url",
                                        F.lit(HREF_RGX), F.lit(1)))
         .alias("href"),
         F.col(url_col).alias("_page"))
-    # _let-bind the resolved href: canonicalize_url references its
+    # let-bind the resolved href: canonicalize_url references its
     # argument ~15 times inside CASE WHEN branches, and codegen's
     # subexpression elimination does not hoist subtrees nested under
     # conditionals — composed directly, the whole resolve_href regex
@@ -122,7 +123,7 @@ def extract_links(pages: DataFrame, url_col: str = "url",
     # edge harvest at the 50k-page probe, local[32])
     edges = raw.select(
         "src",
-        _let(resolve_href(F.col("_page"), F.col("href")),
+        let(resolve_href(F.col("_page"), F.col("href")),
              lambda r: canonicalize_url(r))
         .alias("dst")).filter(F.col("dst").isNotNull())
     if drop_self_loops:
@@ -218,10 +219,9 @@ def extract_anchor_texts(pages: DataFrame, url_col: str = "url",
         F.trim(F.regexp_replace(
             F.lower(F.regexp_extract("tag", ANCHOR_RGX, 2)),
             r"\s+", " ")).alias("anchor_text"))
-    from tecs_hardware_kbc_spark.operators.augment import _let
 
     return (parsed
-            .select(_let(resolve_href(F.col("_page"), F.col("href")),
+            .select(let(resolve_href(F.col("_page"), F.col("href")),
                          lambda r: canonicalize_url(r)).alias("dst"),
                 "anchor_text")
             .filter(F.col("dst").isNotNull() & (F.col("anchor_text") != ""))

@@ -30,6 +30,8 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import Column, DataFrame
 
+from tecs_hardware_kbc_spark.functions.columns import let
+
 # One numeric definition for the whole engine: context.build_row_number_counts
 # and the ner 'number' tag must agree (LF parity depends on it).
 NUMBER_RE = r"^[+-]?\d+(\.\d+)?$"
@@ -116,12 +118,6 @@ def with_lingual(sentences: DataFrame, words_col: str = "words") -> DataFrame:
 NOMINAL_TAGS = ("NOUN", "PROPN")
 
 
-def _dep_let(val: Column, body) -> Column:
-    """Bind a computed value once per row (augment._let — Spark HOF
-    lambdas re-evaluate captured subexpressions per array element)."""
-    return F.element_at(F.transform(F.array(val), body), 1)
-
-
 def dep_col(words: Column | None = None) -> Column:
     """``struct<dep_parents array<int>, dep_labels array<string>>`` for a
     sentence's words: 0-based head indices (-1 for the root) + labels."""
@@ -164,9 +160,9 @@ def dep_col(words: Column | None = None) -> Column:
             return F.struct(parent.alias("dep_parents"),
                             label.alias("dep_labels"))
 
-        return _dep_let(env, out)
+        return let(env, out)
 
-    return _dep_let(pos, build)
+    return let(pos, build)
 
 
 def with_dependencies(sentences: DataFrame,

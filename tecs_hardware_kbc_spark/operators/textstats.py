@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 
+from tecs_hardware_kbc_spark.functions.columns import let
+
 from tecs_hardware_kbc_spark.operators.dedup import norm_text
 
 # tiny function-word inventories; enough signal for a heuristic lang-id
@@ -101,10 +103,10 @@ def token_stats(docs: DataFrame, id_col: str = "doc_id",
 
 
 def _stopword_ratio(text_col, lang: str, words=None) -> Column:
-    """``words`` (a pre-bound word-array column, e.g. a ``_let`` lambda
+    """``words`` (a pre-bound word-array column, e.g. a ``let`` lambda
     variable) lets callers share ONE split across several ratios —
     without it each ratio re-splits the text (Spark has no subexpression
-    cache across HOF lambda invocations, see augment._let)."""
+    cache across HOF lambda invocations, see functions.columns.let)."""
     sw = F.array(*[F.lit(w) for w in STOPWORDS[lang]])
     if words is None:
         words = _words(text_col)
@@ -115,9 +117,8 @@ def _stopword_ratio(text_col, lang: str, words=None) -> Column:
 def lang_pred_cols(text_col) -> tuple[Column, Column]:
     """(lang_pred, lang_score) column expressions — the single source of
     truth shared by ``language_id`` and the fused curation funnel. The
-    word array is ``_let``-bound so the text is split ONCE per row, not
+    word array is ``let``-bound so the text is split ONCE per row, not
     once per language (measured 5x on the funnel's language gate)."""
-    from tecs_hardware_kbc_spark.operators.augment import _let
 
     def best_of(words):
         scores = F.array(*[
@@ -127,7 +128,7 @@ def lang_pred_cols(text_col) -> tuple[Column, Column]:
         ])
         return F.array_max(scores)
 
-    best = _let(_words(text_col), best_of)
+    best = let(_words(text_col), best_of)
     return (F.when(best["score"] > 0, best["lang"]).otherwise("und"),
             best["score"])
 
@@ -168,15 +169,14 @@ def quality_components(text, words=None) \
 
 def quality_col(text) -> Column:
     """The composite quality score in [0,1], rounded to 6dp (the
-    oracle-stable convention). The word array is ``_let``-bound so the
+    oracle-stable convention). The word array is ``let``-bound so the
     composite splits the text once per row."""
-    from tecs_hardware_kbc_spark.operators.augment import _let
 
     def composite(words):
         ln, al, sw, wl = quality_components(text, words)
         return F.round((ln + al + sw + wl) / 4.0, 6)
 
-    return _let(_words(text), composite)
+    return let(_words(text), composite)
 
 
 def quality_score(docs: DataFrame, id_col: str = "doc_id",

@@ -1,9 +1,21 @@
 """End-to-end KBC pipeline: pages -> triples (SURVEY §3 lifecycle).
 
 The reference's hard-coded operator DAG (parse -> mentions -> candidates ->
-featurize -> label -> models -> score, ``transistors.py:138-618``) becomes a
-declarative chain of DataFrame stages; Catalyst plans each one. Differences
-that matter at scale:
+featurize -> label -> models -> score, ``transistors.py:138-618``) is
+declared ONCE here, by ``kbc_graph``: a list of named nodes, each with the
+names of its inputs and a builder; Catalyst plans each one. Two
+materializers run that one graph:
+
+* ``run_kbc`` (in memory: tests, ``__spark_entry__``, streaming) builds
+  every plan on the calling thread and ``localCheckpoint``s the pinned
+  stages in a 3-wide thread pool, each node as soon as its inputs are
+  ready, so independent stages and the per-relation tails overlap;
+* ``run_kbc_checkpointed`` (bench + cluster runs) commits every stage, in
+  declared order, as a resumable parquet table with lineage and metrics
+  (``plans.lineage.StageRunner``); a resumed run skips every complete
+  stage without building its plan.
+
+Differences that matter at scale:
 
 * parse + mention + context stages are computed once per corpus and shared
   by ALL relations (the reference re-walks Postgres per relation);
@@ -12,19 +24,23 @@ that matter at scale:
 * threshold tuning = the one-pass sweep (scoring.threshold_sweep);
 * canonicalization = connected components over alias edges;
 * triples land partitioned by predicate (``partitionBy("pred")``).
-
-``run_kbc`` is the in-memory form (tests, ``__spark_entry__``);
-``run_kbc_checkpointed`` adds resumable parquet stage checkpoints + lineage
-metrics via ``plans.lineage.StageRunner`` (bench + cluster runs).
 """
 
 from __future__ import annotations
 
+import uuid
+from collections.abc import Callable
+from concurrent.futures import (
+    FIRST_COMPLETED,
+    Future,
+    ThreadPoolExecutor,
+    wait,
+)
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 import pyspark.sql.functions as F
-from pyspark.sql.window import Window
 
 from tecs_hardware_kbc_spark.operators import candidates as C
 from tecs_hardware_kbc_spark.operators import context as X
@@ -35,10 +51,18 @@ from tecs_hardware_kbc_spark.operators.canonicalize import (
     doc_alias_edges,
 )
 from tecs_hardware_kbc_spark.operators.extract import parse_pages
+from tecs_hardware_kbc_spark.operators.features import (
+    encode_features,
+    feature_vocabulary,
+    featurize,
+    fit_logreg_multitask,
+    predict_logreg,
+)
 from tecs_hardware_kbc_spark.operators.labeling import (
     RELATION_NEEDS,
     apply_lfs,
     build_sentence_context,
+    weighted_marginals,
     with_context,
 )
 from tecs_hardware_kbc_spark.operators.linking import (
@@ -51,10 +75,46 @@ from tecs_hardware_kbc_spark.operators.scoring import (
     is_dev_doc,
     tune_and_score,
 )
+from tecs_hardware_kbc_spark.plans.lineage import StageRunner
 
 BINARY_RELATIONS = ["stg_temp_min", "stg_temp_max", "polarity", "ce_v_max"]
 UNARY_RELATIONS = ["typ_gbp", "typ_supply_current"]
 ALL_RELATIONS = BINARY_RELATIONS + UNARY_RELATIONS
+
+# context key, as the mention matchers, candidates and entities read it
+# -> the stage holding that table
+CONTEXT_STAGES = {"row": "row_ngrams", "col": "col_ngrams",
+                  "row2": "row_spread2", "row5": "row_spread5",
+                  "ncell": "neighbor_cells"}
+# the ce_v_max-only context tables (build_ce_context), one stage each
+CE_CONTEXT = ("rowhead", "colhead", "row_parts", "col_parts", "row_nnum")
+# mention table -> (gram pre-gate, tables its matcher reads besides the
+# sentences, matcher(grams, sentences, gazetteer, ctx)). With the compact
+# gram table, each matcher explodes only its pre-gated gram subset
+# (mentions.gated_grams): the explode is where context columns get
+# duplicated per gram, so gating before it skips ~95% of that row traffic
+# per matcher. Gates are supersets of the matchers' own first filters;
+# results are identical.
+MENTIONS = {
+    "part": (M.pregate_part, ("gazetteer",),
+             lambda g, s, gz, c: M.part_mentions(g, gz)),
+    "stg_temp_min": (M.pregate_numeric(2), (),
+                     lambda g, s, gz, c: M.temp_mentions(g, "min")),
+    "stg_temp_max": (M.pregate_numeric(2), (),
+                     lambda g, s, gz, c: M.temp_mentions(g, "max")),
+    "polarity": (M.pregate_polarity, (),
+                 lambda g, s, gz, c: M.polarity_mentions(g, s)),
+    "ce_v_max": (M.pregate_numeric(1), ("row_ngrams",),
+                 lambda g, s, gz, c: M.ce_v_max_mentions(g, s, c["row"])),
+    "gain": (M.pregate_numeric(1),
+             ("row_ngrams", "row_spread2", "col_ngrams"),
+             lambda g, s, gz, c: M.gain_mentions(g, s, c["row"], c["row2"],
+                                                 c["col"])),
+    "current": (M.pregate_numeric(2),
+                ("row_ngrams", "row_spread5", "col_ngrams"),
+                lambda g, s, gz, c: M.current_mentions(g, s, c["row"],
+                                                       c["row5"], c["col"])),
+}
 
 
 def ingest(pages: DataFrame, lang: str | None = "en") -> DataFrame:
@@ -91,7 +151,6 @@ class KBCResult:
     entities: DataFrame
     scores: dict[str, dict] = field(default_factory=dict)
     thresholds: dict[str, float] = field(default_factory=dict)
-    stage_counts: dict[str, int] = field(default_factory=dict)
 
 
 def gold_entities(gold: DataFrame) -> DataFrame:
@@ -109,28 +168,12 @@ def extract_mentions(grams: DataFrame, sentences: DataFrame,
                      gazetteer: DataFrame,
                      ctx: dict[str, DataFrame],
                      compact: DataFrame | None = None) -> dict[str, DataFrame]:
-    # With the compact gram table available, each matcher explodes only
-    # its pre-gated gram subset (mentions.gated_grams) — the explode is
-    # where context columns get duplicated per gram, so gating before it
-    # skips ~95% of that row traffic per matcher. Gates are supersets of
-    # the matchers' own first filters; results are identical.
-    if compact is None:
-        gp = g1 = g2 = gpol = grams
-    else:
-        gp = M.gated_grams(compact, M.pregate_part)
-        g1 = M.gated_grams(compact, M.pregate_numeric(1))
-        g2 = M.gated_grams(compact, M.pregate_numeric(2))
-        gpol = M.gated_grams(compact, M.pregate_polarity)
+    """Every ``MENTIONS`` table over ``grams``, or, given the compact gram
+    table, over each matcher's pre-gated subset of it."""
     return {
-        "part": M.part_mentions(gp, gazetteer),
-        "stg_temp_min": M.temp_mentions(g2, "min"),
-        "stg_temp_max": M.temp_mentions(g2, "max"),
-        "polarity": M.polarity_mentions(gpol, sentences),
-        "ce_v_max": M.ce_v_max_mentions(g1, sentences, ctx["row"]),
-        "gain": M.gain_mentions(g1, sentences, ctx["row"], ctx["row2"],
-                                ctx["col"]),
-        "current": M.current_mentions(g2, sentences, ctx["row"],
-                                      ctx["row5"], ctx["col"]),
+        k: match(grams if compact is None else M.gated_grams(compact, gate),
+                 sentences, gazetteer, ctx)
+        for k, (gate, _, match) in MENTIONS.items()
     }
 
 
@@ -204,6 +247,278 @@ def relation_entities(rel: str, scored: DataFrame,
     return ents
 
 
+@dataclass(frozen=True)
+class Stage:
+    """A table of the KBC graph: ``build(t)`` returns its plan from the
+    resolved tables ``t``, on the thread that calls ``materialize``, and
+    runs no Spark job. ``run_kbc`` pins (localCheckpoints) it when ``pin``
+    is set and leaves it a lazy view otherwise; ``run_kbc_checkpointed``
+    commits every stage."""
+    name: str
+    inputs: tuple[str, ...]
+    build: Callable[[dict], DataFrame]
+    pin: bool = True
+    partition_by: tuple[str, ...] = ()
+
+
+@dataclass(frozen=True)
+class Job:
+    """A node whose ``build(t)`` runs Spark jobs itself and returns any
+    value. It is never committed: ``run_kbc`` runs it in its pool,
+    ``run_kbc_checkpointed`` inline."""
+    name: str
+    inputs: tuple[str, ...]
+    build: Callable[[dict], object]
+
+
+def _once(build):
+    """``build(t)``, evaluated on the first call only."""
+    memo = []
+
+    def get(t):
+        if not memo:
+            memo.append(build(t))
+        return memo[0]
+    return get
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    out = dfs[0]
+    for df in dfs[1:]:
+        out = out.unionByName(df)
+    return out
+
+
+def _fit_multitask(feats: dict[str, DataFrame]) -> dict[str, DataFrame]:
+    """Reference flow (transistors.py:350-567): featurize -> frozen key
+    space -> shared-trunk multi-task model trained on the weak labels ->
+    model marginals replace the vote ratio. ``feats``: per relation, the
+    pinned featurized candidates with their vote ``prob`` and a
+    ``cand_id``. The multitask trainer collects the per-relation sparse
+    matrices to the driver — see the size bound in
+    ``fit_logreg_multitask``'s COST CONTRACT; beyond it, use
+    ``features.fit_logreg_distributed`` (spark.ml LBFGS) per task."""
+    vocab = feature_vocabulary(
+        _union([df.select("features") for df in feats.values()])
+    ).localCheckpoint()
+    vsize = vocab.count()
+    # soft targets: the vote marginals themselves (the reference trains
+    # Emmental on the LabelModel's probabilistic labels, not a hard
+    # threshold) — cross-entropy gradient (p - y) handles y in [0, 1]
+    encoded = {
+        rel: encode_features(df, vocab, ["cand_id"])
+        .join(df.select("cand_id", F.col("prob").alias("_y")), "cand_id")
+        .localCheckpoint()
+        for rel, df in feats.items()
+    }
+    model = fit_logreg_multitask(encoded, "_y", vsize)
+    out = {}
+    for rel, df in feats.items():
+        pred = predict_logreg(encoded[rel], model["heads"][rel],
+                              out_col="_prob_lr")
+        out[rel] = (df.drop("prob", "features")
+                    .join(pred.select("cand_id", "_prob_lr"), "cand_id")
+                    .withColumnRenamed("_prob_lr", "prob"))
+    return out
+
+
+def kbc_graph(relations: list[str], gold: bool = False,
+              canonicalize: bool = True, sweep: bool = True,
+              default_threshold: float = 0.5, supervision: str = "votes",
+              visual_coords: DataFrame | None = None) -> list[Stage | Job]:
+    """The KBC graph over the external tables ``pages`` and ``gazetteer``
+    (plus ``gold`` entities and their per-(relation, dev slice)
+    ``gold_totals`` when ``gold``), in the order ``run_kbc_checkpointed``
+    commits its stages. ``entities_<rel>`` yields ``(thresholded
+    entities, threshold, scores or None)``; the options are ``run_kbc``'s.
+
+    The compact gram table and the ce_v_max context tables are built on
+    first use, so a resumed checkpointed run, which builds no stage plan,
+    never builds them."""
+    multitask = supervision == "multitask"
+    compact = _once(lambda t: M.gram_space_compact(t["sentences"]))
+    ce = _once(lambda t: build_ce_context(t["grams"]))
+
+    def ctx(t: dict) -> dict[str, DataFrame]:
+        return {k: t[s] for k, s in CONTEXT_STAGES.items() if s in t}
+
+    def mentions(t: dict, key: str) -> DataFrame:
+        gate, _, match = MENTIONS[key]
+        return match(M.gated_grams(compact(t), gate), t["sentences"],
+                     t["gazetteer"], ctx(t))
+
+    def score(t: dict, rel: str) -> DataFrame:
+        c = ctx(t)
+        needs = set(RELATION_NEEDS[rel])
+        if multitask:
+            # the feature layer reads the same context arrays the LFs do
+            needs |= {"a_row", "a_col"}
+        cands = with_context(
+            relation_candidates(rel, {k: t[f"mentions_{k}"] for k in MENTIONS},
+                                c, visual=visual_coords),
+            t["sentence_context"], c["row"], c["col"], needs=needs,
+            extra=({k: t[f"ce_ctx_{k}"] for k in CE_CONTEXT}
+                   if rel == "ce_v_max" else None))
+        if multitask:
+            cands = featurize(cands)
+        scored = apply_lfs(cands, rel)
+        if supervision == "weighted_votes":
+            scored = weighted_marginals(scored)
+        if multitask:
+            scored = scored.withColumn("cand_id",
+                                       F.monotonically_increasing_id())
+        return scored
+
+    def finish(t: dict, rel: str):
+        scored = t["multitask"][rel] if multitask else t[f"scored_{rel}"]
+        components = t.get("components")
+        parts_by_doc = (t["gold"].select("doc", "part").dropDuplicates()
+                        if gold else None)
+        ents = relation_entities(rel, scored, ctx(t), parts_by_doc,
+                                 dedup=components is None)
+        if components is not None:
+            ents = canonicalize_entities(ents, components, on="doc")
+        ents = ents.localCheckpoint()
+        if gold and sweep:
+            # dev-tune/test-report (reference protocol): b = argmax-F1 on
+            # the dev doc slice; reported P/R/F1 comes from the disjoint
+            # test slice at that b
+            totals = t["gold_totals"]
+            b, stats = tune_and_score(
+                ents, t["gold"].filter(F.col("attribute") == rel),
+                dev_total=totals.get((rel, True), 0),
+                test_total=totals.get((rel, False), 0),
+                default_threshold=default_threshold)
+        else:
+            b, stats = default_threshold, None
+        return ents.filter(F.col("prob") > b), b, stats
+
+    nodes: list[Stage | Job] = [
+        Stage("sentences", ("pages",),
+              lambda t: parse_pages(ingest(t["pages"]))),
+        # the exploded view over the compact gram arrays: pinning it would
+        # re-inflate the compact cache 25x, whereas as a parquet stage
+        # dictionary/RLE encoding collapses the repeated context columns
+        # and each consumer's scan column-prunes
+        Stage("grams", ("sentences",),
+              lambda t: M.explode_gram_arrays(compact(t)), pin=False),
+        Stage("row_ngrams", ("grams",),
+              lambda t: X.build_row_ngrams(t["grams"])),
+        Stage("col_ngrams", ("grams",),
+              lambda t: X.build_col_ngrams(t["grams"])),
+        Stage("row_spread2", ("row_ngrams",),
+              lambda t: X.build_row_spread(t["row_ngrams"], 2)),
+        Stage("row_spread5", ("row_ngrams",),
+              lambda t: X.build_row_spread(t["row_ngrams"], 5)),
+        Stage("sentence_context", ("sentences", "grams"),
+              lambda t: build_sentence_context(t["sentences"], t["grams"],
+                                               compact=compact(t))),
+    ]
+    if "ce_v_max" in relations:
+        nodes += [Stage(f"ce_ctx_{k}", ("grams",), lambda t, k=k: ce(t)[k])
+                  for k in CE_CONTEXT]
+    if any(r in UNARY_RELATIONS for r in relations):
+        nodes.append(Stage(
+            "neighbor_cells", ("grams",),
+            lambda t: X.build_neighbor_cell_ngrams(t["grams"],
+                                                   directions=["RIGHT"])))
+    # only the part mentions, read by every binary relation, are pinned
+    nodes += [Stage(f"mentions_{k}", ("sentences",) + reads,
+                    partial(mentions, key=k), pin=k == "part")
+              for k, (_, reads, _) in MENTIONS.items()]
+    if canonicalize:
+        # reads the pages; "sentences" only orders the alias pass after
+        # the parse
+        nodes.append(Job("components", ("pages", "sentences"),
+                         lambda t: connected_components(
+                             doc_alias_edges(ingest(t["pages"]))).persist()))
+    scored_inputs = (tuple(f"mentions_{k}" for k in MENTIONS)
+                     + ("sentence_context", "row_ngrams", "col_ngrams"))
+    tail_inputs = ((("components",) if canonicalize else ())
+                   + (("gold",) if gold else ())
+                   + (("gold_totals",) if gold and sweep else ()))
+    for rel in relations:
+        nodes.append(Stage(
+            f"scored_{rel}",
+            scored_inputs + (tuple(f"ce_ctx_{k}" for k in CE_CONTEXT)
+                             if rel == "ce_v_max" else ()),
+            partial(score, rel=rel), pin=multitask))
+        nodes.append(Job(
+            f"entities_{rel}",
+            (("multitask",) if multitask else (f"scored_{rel}",))
+            + tail_inputs
+            + (("row_ngrams", "row_spread2", "row_spread5", "neighbor_cells")
+               if rel in UNARY_RELATIONS else ()),
+            partial(finish, rel=rel)))
+    if multitask:
+        # the joint fit is a barrier across relations
+        nodes.append(Job("multitask",
+                         tuple(f"scored_{r}" for r in relations),
+                         lambda t: _fit_multitask(
+                             {r: t[f"scored_{r}"] for r in relations})))
+    nodes.append(Stage(
+        "triples", tuple(f"entities_{r}" for r in relations),
+        lambda t: entities_to_triples(
+            _union([t[f"entities_{r}"][0] for r in relations])),
+        pin=False, partition_by=("pred",)))
+    return nodes
+
+
+def materialize(nodes: list[Stage | Job], tables: dict, mat) -> dict:
+    """Resolve every node into a copy of ``tables`` (the external inputs):
+    each node as soon as its inputs are resolved, in declared order.
+    ``mat(node, thunk)`` returns the node's value, or a Future of it."""
+    t = dict(tables)
+    pending, running = list(nodes), {}
+    while pending or running:
+        blocked = []
+        for node in pending:
+            if all(i in t for i in node.inputs):
+                out = mat(node, partial(node.build, t))
+                if isinstance(out, Future):
+                    running[out] = node.name
+                else:
+                    t[node.name] = out
+            else:
+                blocked.append(node)
+        if running:
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for f in done:
+                t[running.pop(f)] = f.result()
+        elif len(blocked) == len(pending):
+            raise ValueError("unresolvable inputs: "
+                             f"{[n.name for n in blocked]}")
+        pending = blocked
+    return t
+
+
+def _kbc(pages: DataFrame, gazetteer: DataFrame, gold: DataFrame | None,
+         relations: list[str] | None, mat, sweep: bool = True,
+         **options) -> KBCResult:
+    """Run ``kbc_graph`` through the materializer ``mat``."""
+    relations = relations or ALL_RELATIONS
+    tables = {"pages": pages, "gazetteer": gazetteer}
+    if gold is not None:
+        tables["gold"] = gold_entities(gold).persist()
+        if sweep:
+            tables["gold_totals"] = {
+                (r["attribute"], r["_dev"]): r["n"]
+                for r in tables["gold"]
+                .withColumn("_dev", is_dev_doc(F.col("doc")))
+                .groupBy("attribute", "_dev")
+                .agg(F.count("*").alias("n")).collect()
+            }
+    t = materialize(kbc_graph(relations, gold=gold is not None, sweep=sweep,
+                              **options), tables, mat)
+    finals = {rel: t[f"entities_{rel}"] for rel in relations}
+    return KBCResult(
+        triples=t["triples"],
+        entities=_union([final for final, _, _ in finals.values()]),
+        scores={rel: stats for rel, (_, _, stats) in finals.items()
+                if stats is not None},
+        thresholds={rel: b for rel, (_, b, _) in finals.items()})
+
+
 def run_kbc(
     spark: SparkSession,
     pages: DataFrame,
@@ -228,207 +543,62 @@ def run_kbc(
     (agreement-statistics accuracy weighting — the LabelModel stand-in),
     or "multitask" (the reference's full flow: featurize -> frozen key
     space -> shared-trunk multi-task LR trained on the weak labels ->
-    model marginals, transistors.py:350-567). The multitask trainer
-    collects the per-relation sparse matrices to the driver — see the
-    size bound in ``fit_logreg_multitask``'s COST CONTRACT; beyond it,
-    use ``features.fit_logreg_distributed`` (spark.ml LBFGS) per task.
+    model marginals, transistors.py:350-567; see ``_fit_multitask``).
+
+    If any node fails, the error is re-raised once every sibling has
+    stopped: queued nodes never start, and the Spark jobs of running ones
+    are cancelled.
     """
-    from concurrent.futures import ThreadPoolExecutor
-
-    relations = relations or ALL_RELATIONS
-
-    # localCheckpoint at every stage boundary: it caches AND truncates the
+    # localCheckpoint at every pinned stage: it caches AND truncates the
     # logical plan, so the ~30 downstream actions (per-relation sweeps,
     # counts) each plan against a flat LogicalRDD instead of re-analyzing
-    # the full parse->grams->LF lineage. On a cluster the checkpointed
-    # variant (parquet stage tables) plays this role.
+    # the full parse->grams->LF lineage.
     #
-    # Independent stages — and the six per-relation sub-pipelines — are
-    # submitted CONCURRENTLY (Spark's scheduler interleaves jobs): the
-    # dominant cost at moderate scale is per-stage scheduling latency, and
-    # overlapping jobs hides it while keeping every core busy.
-    clean = ingest(pages)
-    # the parse UDF reads the ingest aggregation's shuffle output directly
-    # — no extra full shuffle of the html corpus. The session's AQE
-    # coalesce floor (minPartitionSize, session.py) keeps that exchange at
-    # full parallelism even though compressed html makes it look tiny.
-    sentences = parse_pages(clean).localCheckpoint()
-    # the gram table is materialized once: higher-order-function evaluation
-    # is the expensive part (HOFs don't fully codegen), so ~10 downstream
-    # consumers must read cached results, not re-derive them. The COMPACT
-    # pre-explode array form is what gets checkpointed (context columns
-    # stored once per sentence, not once per gram — ~25x less cached row
-    # volume); consumers re-run only the cheap explode. Measured 1.75x
-    # faster end-to-end at 64k pages than checkpointing the exploded rows.
-    grams_compact = M.gram_space_compact(sentences)
-    grams = M.explode_gram_arrays(grams_compact)
-
-    def ckpt(df: DataFrame) -> DataFrame:
-        return df.localCheckpoint()
-
-    # 3 concurrent jobs is the sweet spot measured at both 8 and 32 cores:
-    # enough overlap to hide stage latency, not enough to thrash the
-    # scheduler/caches (8 concurrent jobs doubled wall time on 8 cores)
+    # Pinned stages and Job nodes run CONCURRENTLY in the pool (Spark's
+    # scheduler interleaves jobs): the dominant cost at moderate scale is
+    # per-stage scheduling latency, and overlapping jobs hides it while
+    # keeping every core busy. 3 concurrent jobs is the sweet spot
+    # measured at both 8 and 32 cores: enough overlap to hide stage
+    # latency, not enough to thrash the scheduler/caches (8 concurrent
+    # jobs doubled wall time on 8 cores).
+    sc = spark.sparkContext
+    # job tags are thread-local and, unlike job groups, leave a caller's
+    # group alone
+    tag = f"run_kbc-{uuid.uuid4().hex}"
     pool = ThreadPoolExecutor(max_workers=3)
+    submitted: list[Future] = []
+
+    def in_pool(fn) -> Future:
+        def tagged():
+            sc.addJobTag(tag)
+            try:
+                return fn()
+            finally:
+                sc.removeJobTag(tag)
+        submitted.append(pool.submit(tagged))
+        return submitted[-1]
+
+    def mat(node: Stage | Job, build):
+        if isinstance(node, Job):
+            return in_pool(build)
+        df = build()
+        return in_pool(df.localCheckpoint) if node.pin else df
+
     try:
-        row_f = pool.submit(ckpt, X.build_row_ngrams(grams))
-        col_f = pool.submit(ckpt, X.build_col_ngrams(grams))
-        sent_ctx_f = pool.submit(
-            ckpt, build_sentence_context(sentences, grams,
-                                         compact=grams_compact))
-        parts_f = pool.submit(
-            ckpt, M.part_mentions(
-                M.gated_grams(grams_compact, M.pregate_part), gazetteer))
-        comps_f = (
-            pool.submit(
-                lambda: connected_components(doc_alias_edges(clean)).persist())
-            if canonicalize else None
-        )
-        gold_ents = (gold_entities(gold).persist()
-                     if gold is not None else None)
-        gold_totals: dict[tuple[str, bool], int] = {}
-        if gold_ents is not None and sweep:
-            gold_totals = {
-                (r["attribute"], r["_dev"]): r["n"]
-                for r in gold_ents
-                .withColumn("_dev", is_dev_doc(F.col("doc")))
-                .groupBy("attribute", "_dev")
-                .agg(F.count("*").alias("n")).collect()
-            }
-        parts_by_doc = (
-            gold_ents.select("doc", "part").dropDuplicates()
-            if gold_ents is not None else None
-        )
-
-        row = row_f.result()
-        row2_f = pool.submit(ckpt, X.build_row_spread(row, 2))
-        row5_f = pool.submit(ckpt, X.build_row_spread(row, 5))
-        extra_f = None
-        if "ce_v_max" in relations:
-            # one future per table so the pool interleaves their jobs
-            extra_f = {k: pool.submit(ckpt, v)
-                       for k, v in build_ce_context(grams).items()}
-        ncell_f = (
-            pool.submit(ckpt, X.build_neighbor_cell_ngrams(
-                grams, directions=["RIGHT"]))
-            if any(r in UNARY_RELATIONS for r in relations) else None
-        )
-        ctx = {"row": row, "col": col_f.result(),
-               "row2": row2_f.result(), "row5": row5_f.result()}
-        if ncell_f is not None:
-            ctx["ncell"] = ncell_f.result()
-        sent_ctx = sent_ctx_f.result()
-        mentions = extract_mentions(grams, sentences, gazetteer, ctx,
-                                    compact=grams_compact)
-        mentions["part"] = parts_f.result()
-        components = comps_f.result() if comps_f else None
-        extra = {k: f.result() for k, f in extra_f.items()} if extra_f else {}
-
-        def score_relation(rel: str) -> DataFrame:
-            cands = relation_candidates(rel, mentions, ctx,
-                                        visual=visual_coords)
-            needs = set(RELATION_NEEDS[rel])
-            if supervision == "multitask":
-                # the feature layer reads the same context arrays the LFs do
-                needs |= {"a_row", "a_col"}
-            cands_ctx = with_context(cands, sent_ctx, ctx["row"], ctx["col"],
-                                     needs=needs, extra=extra)
-            if supervision == "multitask":
-                from tecs_hardware_kbc_spark.operators.features import (
-                    featurize)
-                cands_ctx = featurize(cands_ctx)
-            scored = apply_lfs(cands_ctx, rel)
-            if supervision == "weighted_votes":
-                from tecs_hardware_kbc_spark.operators.labeling import (
-                    weighted_marginals)
-                scored = weighted_marginals(scored)
-            return scored
-
-        multitask_scored: dict[str, DataFrame] = {}
-        if supervision == "multitask":
-            # Reference flow (transistors.py:350-567): featurize -> frozen
-            # key space -> shared-trunk multi-task model trained on the
-            # weak labels -> model marginals replace the vote ratio. The
-            # joint fit is a barrier across relations, so stage it before
-            # the per-relation entity phase.
-            from tecs_hardware_kbc_spark.operators.features import (
-                encode_features, feature_vocabulary, fit_logreg_multitask,
-                predict_logreg)
-
-            feats = {rel: pool.submit(
-                lambda rel=rel: score_relation(rel)
-                .withColumn("cand_id", F.monotonically_increasing_id())
-                .localCheckpoint()) for rel in relations}
-            feats = {rel: f.result() for rel, f in feats.items()}
-            union = None
-            for df in feats.values():
-                sel = df.select("features")
-                union = sel if union is None else union.unionByName(sel)
-            vocab = feature_vocabulary(union).localCheckpoint()
-            vsize = vocab.count()
-            # soft targets: the vote marginals themselves (the reference
-            # trains Emmental on the LabelModel's probabilistic labels,
-            # not a hard threshold) — cross-entropy gradient (p - y)
-            # handles y in [0, 1] directly
-            encoded = {
-                rel: encode_features(df, vocab, ["cand_id"])
-                .join(df.select("cand_id", F.col("prob").alias("_y")),
-                      "cand_id")
-                .localCheckpoint()
-                for rel, df in feats.items()
-            }
-            model = fit_logreg_multitask(encoded, "_y", vsize)
-            for rel, df in feats.items():
-                pred = predict_logreg(encoded[rel], model["heads"][rel],
-                                      out_col="_prob_lr")
-                multitask_scored[rel] = (
-                    df.drop("prob", "features")
-                    .join(pred.select("cand_id", "_prob_lr"), "cand_id")
-                    .withColumnRenamed("_prob_lr", "prob")
-                )
-
-        def process(rel: str):
-            scored = (multitask_scored[rel] if supervision == "multitask"
-                      else score_relation(rel))
-            ents = relation_entities(rel, scored, ctx, parts_by_doc,
-                                     dedup=components is None)
-            if components is not None:
-                ents = canonicalize_entities(ents, components, on="doc")
-            ents = ents.localCheckpoint()
-            if sweep and gold_ents is not None:
-                rel_gold = gold_ents.filter(F.col("attribute") == rel)
-                # dev-tune/test-report (reference protocol): b = argmax-F1
-                # on the dev doc slice; reported P/R/F1 comes from the
-                # disjoint test slice at that b
-                b, stats = tune_and_score(
-                    ents, rel_gold,
-                    dev_total=gold_totals.get((rel, True), 0),
-                    test_total=gold_totals.get((rel, False), 0),
-                    default_threshold=default_threshold)
-            else:
-                b, stats = default_threshold, None
-            return ents.filter(F.col("prob") > b), b, stats
-
-        futures = {rel: pool.submit(process, rel) for rel in relations}
-        result_entities: list[DataFrame] = []
-        scores: dict[str, dict] = {}
-        thresholds: dict[str, float] = {}
-        for rel in relations:
-            final, b, stats = futures[rel].result()
-            thresholds[rel] = b
-            if stats is not None:
-                scores[rel] = stats
-            result_entities.append(final)
+        return _kbc(pages, gazetteer, gold, relations, mat,
+                    canonicalize=canonicalize, sweep=sweep,
+                    default_threshold=default_threshold,
+                    supervision=supervision, visual_coords=visual_coords)
+    except BaseException:
+        pool.shutdown(wait=False, cancel_futures=True)
+        # a running node may start another job after a cancel: repeat it
+        # until every node has stopped
+        sc.cancelJobsWithTag(tag)
+        while wait(submitted, timeout=0.5).not_done:
+            sc.cancelJobsWithTag(tag)
+        raise
     finally:
         pool.shutdown(wait=False)
-
-    entities = result_entities[0]
-    for e in result_entities[1:]:
-        entities = entities.unionByName(e)
-
-    triples = entities_to_triples(entities)
-    return KBCResult(triples=triples, entities=entities, scores=scores,
-                     thresholds=thresholds)
 
 
 def run_kbc_checkpointed(spark: SparkSession, pages_path: str,
@@ -438,123 +608,25 @@ def run_kbc_checkpointed(spark: SparkSession, pages_path: str,
                          resume: bool = True,
                          visual_path: str | None = None) -> KBCResult:
     """Checkpointed variant: each stage is a resumable parquet table with
-    lineage + metrics (plans/lineage.py). Used by bench.py and spark-submit
-    cluster runs.
+    lineage + metrics (plans/lineage.py), committed in declared order.
+    Used by bench.py and spark-submit cluster runs.
 
     ``visual_path``: optional parquet sidecar of per-sentence bboxes
     (url, position, v_top/v_left/v_bottom/v_right) — same semantics as
     ``run_kbc(visual_coords=...)``."""
-    from tecs_hardware_kbc_spark.plans.lineage import StageRunner
-
     runner = StageRunner(spark, out_dir, resume=resume)
-    relations = relations or ALL_RELATIONS
 
-    pages = spark.read.parquet(pages_path)
-    gazetteer = spark.read.parquet(gazetteer_path)
-    gold = spark.read.parquet(gold_path) if gold_path else None
-    visual_coords = (spark.read.parquet(visual_path)
-                     if visual_path else None)
+    def mat(node: Stage | Job, build):
+        if isinstance(node, Job):
+            return build()
+        return runner.run(node.name, build, inputs=list(node.inputs),
+                          partition_by=list(node.partition_by))
 
-    sentences = runner.run(
-        "sentences",
-        lambda: parse_pages(ingest(pages)),
-        inputs=["pages"],
-    ).persist()
-    # exploded-form parquet is the right shape HERE (unlike the in-memory
-    # path's compact array checkpoint): dictionary/RLE encoding collapses
-    # the repeated context columns on disk, and each consumer's scan
-    # column-prunes — whereas an array<struct> column would force every
-    # reader to fetch the whole gram payload
-    grams = runner.run("grams", lambda: M.gram_space(sentences),
-                       inputs=["sentences"])
-    ctx = {
-        "row": runner.run("row_ngrams",
-                          lambda: X.build_row_ngrams(grams),
-                          inputs=["grams"]),
-        "col": runner.run("col_ngrams",
-                          lambda: X.build_col_ngrams(grams),
-                          inputs=["grams"]),
-    }
-    ctx["row2"] = runner.run("row_spread2",
-                             lambda: X.build_row_spread(ctx["row"], 2),
-                             inputs=["row_ngrams"])
-    ctx["row5"] = runner.run("row_spread5",
-                             lambda: X.build_row_spread(ctx["row"], 5),
-                             inputs=["row_ngrams"])
-    sent_ctx = runner.run("sentence_context",
-                          lambda: build_sentence_context(sentences, grams),
-                          inputs=["sentences", "grams"])
-    extra = {}
-    if "ce_v_max" in relations:
-        ce_tables = build_ce_context(grams)
-        extra = {
-            k: runner.run(f"ce_ctx_{k}", lambda df=v: df, inputs=["grams"])
-            for k, v in ce_tables.items()
-        }
-    if any(r in UNARY_RELATIONS for r in relations):
-        ctx["ncell"] = runner.run(
-            "neighbor_cells",
-            lambda: X.build_neighbor_cell_ngrams(grams,
-                                                 directions=["RIGHT"]),
-            inputs=["grams"])
-    mentions = extract_mentions(grams, sentences, gazetteer, ctx)
-    mentions = {
-        k: runner.run(f"mentions_{k}", lambda df=v: df,
-                      inputs=["sentences"])
-        for k, v in mentions.items()
-    }
-
-    gold_ents = gold_entities(gold).persist() if gold is not None else None
-    parts_by_doc = (
-        gold_ents.select("doc", "part").dropDuplicates()
-        if gold_ents is not None else None
-    )
-
-    components = connected_components(
-        doc_alias_edges(ingest(pages))
-    ).persist()
-
-    result_entities = []
-    scores: dict[str, dict] = {}
-    thresholds: dict[str, float] = {}
-    # unary relations read the gain/current mention stages, not a stage
-    # named after the relation itself
-    mention_key = {"typ_gbp": "gain", "typ_supply_current": "current"}
-    for rel in relations:
-        scored = runner.run(
-            f"scored_{rel}",
-            lambda rel=rel: apply_lfs(
-                with_context(relation_candidates(rel, mentions, ctx,
-                                                 visual=visual_coords),
-                             sent_ctx, ctx["row"], ctx["col"],
-                             needs=RELATION_NEEDS[rel], extra=extra), rel),
-            inputs=[f"mentions_{mention_key.get(rel, rel)}", "mentions_part"],
-        )
-        ents = canonicalize_entities(
-            relation_entities(rel, scored, ctx, parts_by_doc, dedup=False),
-            components, on="doc",
-        ).persist()
-        if gold_ents is not None:
-            rel_gold = gold_ents.filter(F.col("attribute") == rel)
-            # dev-tune/test-report, as in run_kbc
-            b, stats = tune_and_score(ents, rel_gold)
-            thresholds[rel] = b
-            final = ents.filter(F.col("prob") > b)
-            scores[rel] = stats
-        else:
-            thresholds[rel] = 0.5
-            final = ents.filter(F.col("prob") > 0.5)
-        result_entities.append(final)
-
-    entities = result_entities[0]
-    for e in result_entities[1:]:
-        entities = entities.unionByName(e)
-
-    triples = runner.run(
-        "triples", lambda: entities_to_triples(entities),
-        inputs=[f"scored_{r}" for r in relations],
-        partition_by=["pred"],
-    )
-    runner.flush_metrics({"scores": scores, "thresholds": thresholds})
-    return KBCResult(triples=triples, entities=entities, scores=scores,
-                     thresholds=thresholds)
+    result = _kbc(
+        spark.read.parquet(pages_path), spark.read.parquet(gazetteer_path),
+        spark.read.parquet(gold_path) if gold_path else None, relations, mat,
+        visual_coords=(spark.read.parquet(visual_path)
+                       if visual_path else None))
+    runner.flush_metrics({"scores": result.scores,
+                          "thresholds": result.thresholds})
+    return result

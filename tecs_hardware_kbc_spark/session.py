@@ -8,7 +8,10 @@ test scale:
 * a bounded Arrow batch size so a batch of large ``html`` blobs cannot blow
   up executor memory during the parse UDF,
 * shuffle partitions sized from the env (the real cluster overrides this
-  with ``spark.sql.shuffle.partitions`` ~= 2-3x total cores).
+  with ``spark.sql.shuffle.partitions`` ~= 2-3x total cores),
+* local cores and driver heap derived from the host (``os.cpu_count()``
+  and ``HEAP_SHARE`` of physical RAM), overridable with
+  ``SPARK_GRAFT_CPUS`` and ``SPARK_DRIVER_MEM``.
 """
 
 from __future__ import annotations
@@ -16,6 +19,17 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# share of physical RAM the driver heap takes by default: local mode runs
+# every executor in this one JVM, and the rest is left to the Python
+# workers and the OS page cache
+HEAP_SHARE = 0.6
+
+
+def _default_heap() -> str:
+    """``HEAP_SHARE`` of this host's physical RAM, as a ``<MiB>m`` size."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{int(ram * HEAP_SHARE) >> 20}m"
 
 
 def get_spark(
@@ -25,21 +39,21 @@ def get_spark(
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
     """Build (or reuse) a SparkSession tuned for the KBC pipeline."""
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count() or 1)
     master = master or f"local[{cpus}]"
     if shuffle_partitions is None:
         try:
             shuffle_partitions = max(int(cpus), 8)
         except ValueError:
-            shuffle_partitions = 32
+            shuffle_partitions = 8
 
-    driver_mem = os.environ.get("SPARK_DRIVER_MEM", "48g")
+    driver_mem = os.environ.get("SPARK_DRIVER_MEM") or _default_heap()
     # Young-gen sized to half the heap: the pipeline churns short-lived
-    # allocation (gram arrays, codegen rows), and with the 48g heap's
-    # default NewRatio the young gen is small enough that minor GCs were
-    # measured at 40% of wall clock on a 32-core 64k-page run; -Xmn at
-    # heap/2 cut the fused datapath 28s -> 21s (A/B'd vs G1 — faster once
-    # but 2x variance — and ZGC — consistent but 24% slower).
+    # allocation (gram arrays, codegen rows), and with the default
+    # NewRatio the young gen is small enough that minor GCs were measured
+    # at 40% of wall clock on a 32-core 64k-page run with a 48g heap;
+    # -Xmn at heap/2 cut the fused datapath 28s -> 21s (A/B'd vs G1 —
+    # faster once but 2x variance — and ZGC — consistent but 24% slower).
     try:
         unit = driver_mem[-1].lower()
         half = max(int(driver_mem[:-1]) // 2, 1)

@@ -1,18 +1,34 @@
 """Golden end-to-end: planted gold must be recovered at P/R >= 0.95
 (BASELINE.json metric), plus checkpoint/resume semantics."""
 
+import hashlib
 import json
+import os
+import time
 
 import pyspark.sql.functions as F
 import pytest
 
+from tecs_hardware_kbc_spark import pipeline
 from tecs_hardware_kbc_spark.corpus import write_corpus
 from tecs_hardware_kbc_spark.pipeline import (
     ALL_RELATIONS,
+    Stage,
     ingest,
+    kbc_graph,
     run_kbc,
     run_kbc_checkpointed,
 )
+
+
+def digests(triples) -> dict[str, str]:
+    """sha256 per predicate over the sorted (subj, obj, prob) rows."""
+    rows: dict[str, list[str]] = {}
+    for r in triples.select("subj", "pred", "obj", "prob").collect():
+        rows.setdefault(r["pred"], []).append(
+            f"{r['subj']}\t{r['obj']}\t{r['prob']:.6f}")
+    return {p: hashlib.sha256("\n".join(sorted(v)).encode()).hexdigest()
+            for p, v in rows.items()}
 
 
 @pytest.fixture(scope="module")
@@ -97,20 +113,63 @@ def test_checkpoint_resume(spark, tmp_path_factory):
             f"{base}/out")
     r1 = run_kbc_checkpointed(spark, *args,
                               gold_path=f"{base}/corpus/gold.parquet")
-    n1 = r1.triples.count()
+    fresh = digests(r1.triples)
     r2 = run_kbc_checkpointed(spark, *args,
                               gold_path=f"{base}/corpus/gold.parquet")
-    assert r2.triples.count() == n1
     metrics = json.load(open(f"{base}/out/metrics.json"))
     assert all(s.get("skipped") for s in metrics["stages"])
+    # the stages of the one declared graph, committed in declared order
+    assert [s["stage"] for s in metrics["stages"]] == [
+        n.name for n in kbc_graph(ALL_RELATIONS, gold=True)
+        if isinstance(n, Stage)]
+    # the in-memory materialization of the same graph: same triples
+    batch = run_kbc(spark, *(spark.read.parquet(f"{base}/corpus/{t}.parquet")
+                             for t in ("pages", "gazetteer", "gold")))
+    assert fresh == digests(r2.triples) == digests(batch.triples)
     # triples written partitioned by predicate
-    import os
     parts = os.listdir(f"{base}/out/triples")
     assert any(p.startswith("pred=") for p in parts)
     # per-partition lineage sidecars (north_rule): row counts + skew
     lin = json.load(open(f"{base}/out/sentences._lineage.json"))
     assert lin["partition_skew"]["n_partitions"] >= 1
     assert sum(lin["partition_rows"].values()) == lin["rows"]
+
+
+def test_failing_relation_cancels_siblings(spark, tiny_tables, monkeypatch):
+    """One relation's failure is re-raised and stops its siblings' Spark
+    jobs, which here would otherwise run for minutes."""
+    tracker = spark.sparkContext.statusTracker()
+    apply_lfs = pipeline.apply_lfs
+    # one second per candidate row: the siblings' jobs outlive the test
+    slow = F.udf(lambda p: time.sleep(1) or True, "boolean")
+    siblings_ran = []
+
+    def flaky(df, rel):
+        if rel == "polarity":
+            # fail once the siblings' jobs are running
+            deadline = time.monotonic() + 60
+            while (not tracker.getActiveJobsIds()
+                   and time.monotonic() < deadline):
+                time.sleep(0.1)
+            siblings_ran.append(bool(tracker.getActiveJobsIds()))
+            raise RuntimeError("injected LF failure")
+        return apply_lfs(df, rel).filter(slow(F.col("prob")))
+
+    monkeypatch.setattr(pipeline, "apply_lfs", flaky)
+    with pytest.raises(RuntimeError, match="injected LF failure"):
+        run_kbc(spark, tiny_tables["pages"], tiny_tables["gaz"],
+                relations=["stg_temp_min", "stg_temp_max", "polarity"],
+                canonicalize=False)
+    assert siblings_ran == [True]
+    # drained within seconds, and no sibling starts another job after
+    # (AQE runs one query as several jobs, with short gaps between them)
+    deadline = time.monotonic() + 10
+    while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+        time.sleep(0.05)
+    quiet_until = time.monotonic() + 3
+    while time.monotonic() < quiet_until:
+        assert tracker.getActiveJobsIds() == []
+        time.sleep(0.05)
 
 
 def test_checkpointed_visual_sidecar(spark, tmp_path_factory):
