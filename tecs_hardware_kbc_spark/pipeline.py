@@ -3,7 +3,7 @@
 The reference's hard-coded operator DAG (parse -> mentions -> candidates ->
 featurize -> label -> models -> score, ``transistors.py:138-618``) is
 declared ONCE here, by ``kbc_graph``: a list of named nodes, each with the
-names of its inputs and a builder; Catalyst plans each one. Two
+names of its inputs and a build function; Catalyst plans each one. Two
 materializers run that one graph:
 
 * ``run_kbc`` (in memory: tests, ``__spark_entry__``, streaming) builds
