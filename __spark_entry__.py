@@ -750,38 +750,43 @@ _GOLDEN_DIGESTS = {
 }
 
 
-def _check_golden(name: str, df, cols) -> None:
-    """XOR-fold of xxhash64 over the named columns vs the committed golden
-    value (xor is order-independent and overflow-free under ANSI mode)."""
+def _digest(df, cols) -> tuple[int, int]:
+    """(rows, XOR-fold of xxhash64 over the named columns): xor is
+    order-independent and overflow-free under ANSI mode."""
     row = df.select(F.bit_xor(F.xxhash64(*cols)).alias("d"),
                     F.count("*").alias("n")).collect()[0]
-    got = (int(row["n"]), int(row["d"]) if row["d"] is not None else 0)
+    return int(row["n"]), int(row["d"]) if row["d"] is not None else 0
+
+
+def _check_golden(name: str, df, cols):
+    """``df`` once its ``_digest`` matches the committed golden value."""
+    got = _digest(df, cols)
     want = _GOLDEN_DIGESTS[name]
     if got != want:
         raise AssertionError(
             f"{name}: golden content digest drifted — got (rows, xor64) = "
             f"{got}, committed {want}. If the change is intentional, "
             f"recompute via print_golden_digests().")
+    return df
 
 
 def _triple_digest_cols():
     return ["subj", "pred", "obj", F.round(F.col("prob"), 6)]
 
 
-@_q("kbc_triples")
-def kbc_triples(spark, sf):
+# Each golden frame is built by ONE function, shared by its entry and by
+# print_golden_digests, so the printed digest is the one the entry checks.
+
+def _golden_triples(spark):
     from tecs_hardware_kbc_spark.pipeline import run_kbc
     pages, gold, gaz = _synthetic_corpus(spark)
-    triples = run_kbc(spark, pages, gaz, gold).triples
-    _check_golden("kbc_triples", triples, _triple_digest_cols())
-    return triples
+    return run_kbc(spark, pages, gaz, gold).triples, _triple_digest_cols()
 
 
-@_q("kbc_sentences")
-def kbc_sentences(spark, sf):
+def _golden_sentences(spark):
     from tecs_hardware_kbc_spark.operators.extract import parse_pages
     pages, _, _ = _synthetic_corpus(spark)
-    s = parse_pages(pages).drop("grams")
+    s = parse_pages(pages)
     # the driver canonicalizer sorts column values in pandas — array columns
     # are unhashable there, so ship arrays as joined strings
     s = s.withColumn("words", F.array_join("words", " ")) \
@@ -790,8 +795,34 @@ def kbc_sentences(spark, sf):
                                               lambda x: x.cast("string")),
                                   " "))
     s = s.fillna({"table_id": -1, "row": -1, "col": -1, "tag": ""})
-    _check_golden("kbc_sentences", s, sorted(s.columns))
-    return s
+    return s, sorted(s.columns)
+
+
+def _golden_extract_invariant(spark):
+    from tecs_hardware_kbc_spark.operators.extract import extract_text
+    import pyspark.sql.types as T
+    pages, _, _ = _synthetic_corpus(spark)
+    udf = F.pandas_udf(lambda s: s.map(extract_text), T.StringType())
+    out = pages.select(
+        "url", (udf(F.col("html")) == F.col("text")).alias("ok"))
+    return out, ["url", "ok"]
+
+
+_GOLDEN_FRAMES = {
+    "kbc_triples": _golden_triples,
+    "kbc_sentences": _golden_sentences,
+    "kbc_extract_invariant": _golden_extract_invariant,
+}
+
+
+@_q("kbc_triples")
+def kbc_triples(spark, sf):
+    return _check_golden("kbc_triples", *_golden_triples(spark))
+
+
+@_q("kbc_sentences")
+def kbc_sentences(spark, sf):
+    return _check_golden("kbc_sentences", *_golden_sentences(spark))
 
 
 def print_golden_digests() -> None:
@@ -800,30 +831,8 @@ def print_golden_digests() -> None:
     from tecs_hardware_kbc_spark.session import get_spark
     spark = get_spark()
     spark.sparkContext.setLogLevel("ERROR")
-    from tecs_hardware_kbc_spark.pipeline import run_kbc
-    from tecs_hardware_kbc_spark.operators.extract import parse_pages
-    pages, gold, gaz = _synthetic_corpus(spark)
-    s = parse_pages(pages).drop("grams")
-    s = s.withColumn("words", F.array_join("words", " ")) \
-         .withColumn("char_offsets",
-                     F.array_join(F.transform("char_offsets",
-                                              lambda x: x.cast("string")),
-                                  " ")) \
-         .fillna({"table_id": -1, "row": -1, "col": -1, "tag": ""})
-    from tecs_hardware_kbc_spark.operators.extract import extract_text
-    import pyspark.sql.types as T
-    inv_udf = F.pandas_udf(lambda c: c.map(extract_text), T.StringType())
-    inv = pages.select(
-        "url", (inv_udf(F.col("html")) == F.col("text")).alias("ok"))
-    for name, df, cols in [
-        ("kbc_triples", run_kbc(spark, pages, gaz, gold).triples,
-         _triple_digest_cols()),
-        ("kbc_sentences", s, sorted(s.columns)),
-        ("kbc_extract_invariant", inv, ["url", "ok"]),
-    ]:
-        row = df.select(F.bit_xor(F.xxhash64(*cols)).alias("d"),
-                        F.count("*").alias("n")).collect()[0]
-        print(f'    "{name}": ({row["n"]}, {row["d"]}),')
+    for name, frame in _GOLDEN_FRAMES.items():
+        print(f'    "{name}": {_digest(*frame(spark))},')
 
 
 # --------------------------------------------------------------------------
@@ -4542,14 +4551,8 @@ def kbc_extract_invariant(spark, sf):
     (must be all-true; violations would also fail pytest). r5: the url+ok
     content is digest-pinned like the other rows-only entries, so a
     corpus or extractor drift fails the entry loudly."""
-    from tecs_hardware_kbc_spark.operators.extract import extract_text
-    import pyspark.sql.types as T
-    pages, _, _ = _synthetic_corpus(spark)
-    udf = F.pandas_udf(lambda s: s.map(extract_text), T.StringType())
-    out = pages.select(
-        "url", (udf(F.col("html")) == F.col("text")).alias("ok"))
-    _check_golden("kbc_extract_invariant", out, ["url", "ok"])
-    return out
+    return _check_golden("kbc_extract_invariant",
+                         *_golden_extract_invariant(spark))
 
 
 @_q("sim_lsh_topk", _sim_lsh_topk_sql())

@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -148,31 +147,31 @@ def run_suite() -> dict:
         "corpus_gen_sec": round(gen_s, 3),
         # same-run host anchors: absolute walls of two fixed plain-python
         # kernels (no Spark, no JVM), measured before the first timed lap
-        # and after the last.  The box is a shared bursty VM whose
-        # identical-work walls swing more than 10x between windows
-        # (co-tenant memory-bus steal: mem_wall_32 has measured 0.84s and
-        # 11.25s for THE SAME KERNEL in one session), so suite numbers are
-        # only comparable across rounds after normalizing to the anchor
-        # (BENCH.md reference window: cpu_wall_32 1.06s, mem_wall_32
-        # 0.84s).  A suite that looks 2x slower on an anchor that is 10x
-        # slower is the box, not a code regression; start/end drift shows
-        # whether one window poisoned part of the run.
+        # and after the last.  A shared bursty VM's identical-work walls
+        # can swing more than 10x between windows (co-tenant memory-bus
+        # steal), so suite numbers are only comparable across runs after
+        # normalizing to the anchor.  A suite that looks 2x slower on an
+        # anchor that is 10x slower is the box, not a code regression;
+        # start/end drift shows whether one window poisoned part of the
+        # run.
         "host_anchor": {"start": anchor_start, "end": _host_anchor()},
     }
 
 
 def _host_anchor() -> dict:
-    """One repeat of each ceiling kernel at 32 procs — cheap (~3s),
-    absolute, Spark-free; co-recorded so every suite JSON carries the
-    host state it was measured under."""
+    """Best of two runs of each kernel, one process per core (``CPUS``,
+    recorded as ``procs``) — cheap (~3s), absolute, Spark-free;
+    co-recorded so every suite JSON carries the host state it was
+    measured under. One process per core keeps the mem kernel's
+    256 MB-per-process footprint in step with the host."""
     import multiprocessing as mp
 
-    walls = {}
-    for name, kern in (("cpu", _ceiling_cpu_kernel),
-                       ("mem", _ceiling_mem_kernel)):
+    walls = {"procs": CPUS}
+    for name, kern in (("cpu", _anchor_cpu_kernel),
+                       ("mem", _anchor_mem_kernel)):
         best = None
         for _ in range(2):
-            ps = [mp.Process(target=kern, args=(1,)) for _ in range(32)]
+            ps = [mp.Process(target=kern, args=(1,)) for _ in range(CPUS)]
             t0 = time.monotonic()
             for p in ps:
                 p.start()
@@ -180,18 +179,18 @@ def _host_anchor() -> dict:
                 p.join()
             d = time.monotonic() - t0
             best = d if best is None else min(best, d)
-        walls[f"{name}_wall_32"] = round(best, 2)
+        walls[f"{name}_wall"] = round(best, 2)
     return walls
 
 
-def _ceiling_cpu_kernel(units: int) -> None:
+def _anchor_cpu_kernel(units: int) -> None:
     for _ in range(units):
         x = 0
         for i in range(12_000_000):
             x += i * i
 
 
-def _ceiling_mem_kernel(units: int) -> None:
+def _anchor_mem_kernel(units: int) -> None:
     import numpy as np
     a = np.zeros(32 * 1024 * 1024)         # 256 MB per process
     for _ in range(units):
@@ -200,50 +199,11 @@ def _ceiling_mem_kernel(units: int) -> None:
             a.sum()                         # streaming read
 
 
-def run_host_ceiling(repeats: int = 2) -> dict:
-    """Measure THIS box's 8 -> 32 strong-scaling ceiling with plain
-    multiprocessing — no Spark, no JVM, no shuffles: a pure-CPU kernel
-    (GIL-free per process) and a memory-bandwidth-bound kernel (numpy
-    streaming passes over 256 MB per process, the regime a shuffle-heavy
-    JVM datapath lives in). Total work is FIXED (the strong-scaling
-    shape): 8 processes x 4 units vs 32 processes x 1 unit; ideal wall
-    ratio is 4x, and the measured ratio / 4 is the ceiling any
-    single-box measurement must be read against — shared memory
-    controllers and the frequency governor make it < 1 on this VM."""
-    import multiprocessing as mp
-
-    def wall(target, procs: int, units: int) -> float:
-        best = None
-        for _ in range(repeats):
-            ps = [mp.Process(target=target, args=(units,))
-                  for _ in range(procs)]
-            t0 = time.monotonic()
-            for p in ps:
-                p.start()
-            for p in ps:
-                p.join()
-            d = time.monotonic() - t0
-            best = d if best is None else min(best, d)
-        return best
-
-    _ramp_cpu()
-    out: dict = {"metric": "host_ceiling_8_to_32", "unit": "ratio"}
-    for name, kern in (("cpu", _ceiling_cpu_kernel),
-                       ("mem", _ceiling_mem_kernel)):
-        w8 = wall(kern, 8, 4)
-        w32 = wall(kern, 32, 1)
-        out[f"{name}_wall_8"] = round(w8, 2)
-        out[f"{name}_wall_32"] = round(w32, 2)
-        out[f"{name}_eff"] = round(w8 / w32 / 4.0, 3)
-    out["value"] = out["mem_eff"]
-    return out
-
-
 def run_curate(cpus: int, n_docs: int, repeats: int = 3) -> dict:
     """Steady-state curation-funnel probe: a deterministic synthetic
     documents table (docgen.synthetic_documents — ~6% exact dups, ~5%
     near-dups, 12% German, 8% junk, hot-domain urls) written ONCE to
-    data/ and reused across parallelism levels, then the full funnel
+    data/ and reused across runs, then the full funnel
     (exact dedup -> minhash-CC near-dedup -> en keep-list -> quality ->
     Gopher rules -> LM perplexity gate -> PII redaction -> split) timed
     best-of-N warm. The LM trains once, untimed (frozen artifact); laps
@@ -301,44 +261,6 @@ def run_curate(cpus: int, n_docs: int, repeats: int = 3) -> dict:
     }
 
 
-def run_curate_scaling() -> None:
-    """north_rule evidence on the CURATION axis: the same funnel over the
-    same synthetic documents table at local[8] and local[32], alternating
-    launches min-merged (one process per level is not evidence on this
-    host), plus a quarter-input 8-core run for weak scaling."""
-    def probe(cpus: int, docs: int) -> dict:
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-                   SPARK_GRAFT_BENCH_DOCS=str(docs))
-        out = subprocess.run(
-            [sys.executable, __file__, "--curate"], env=env,
-            capture_output=True, text=True, check=True)
-        return json.loads(out.stdout.strip().splitlines()[-1])
-
-    n_docs = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "200000"))
-    runs_8, runs_32 = [], []
-    for _ in range(2):
-        runs_32.append(probe(32, n_docs))
-        runs_8.append(probe(8, n_docs))
-    weak_8 = probe(8, n_docs // 4)
-    s8 = min(r["sec"] for r in runs_8)
-    s32 = min(r["sec"] for r in runs_32)
-    strong_eff = s8 / s32 / 4.0
-    weak_eff = weak_8["sec"] / s32
-    report = {
-        "metric": "curate_scaling_8_to_32_cores",
-        "value": round(strong_eff, 3), "unit": "ratio",
-        "docs": n_docs,
-        "sec_8": s8, "sec_32": s32,
-        "sec_8_quarter": weak_8["sec"],
-        "docs_per_sec_32": round(n_docs / s32, 1),
-        "strong_eff": round(strong_eff, 3),
-        "weak_eff": round(weak_eff, 3),
-        "funnel_32": runs_32[0]["funnel"],
-        "host_anchor": _host_anchor(),
-    }
-    print(json.dumps(report))
-
-
 def run_rels_sweep(cpus: int, pages: int = 8000,
                    repeats: int = 3) -> dict:
     """Runtime vs RELATION COUNT at fixed docs — the analog of the
@@ -390,7 +312,7 @@ def run_pagerank(cpus: int, n_edges: int, repeats: int = 3) -> dict:
     """Steady-state PageRank probe: a deterministic synthetic directed
     graph (hash-derived endpoints, 20% of edges aimed at 32 hub nodes
     for realistic in-degree skew, ~n_edges/4 nodes) written ONCE to
-    data/ and reused across parallelism levels, then
+    data/ and reused across runs, then
     graph.pagerank_fixed_point (5 power iterations: per iteration one
     src-keyed join + one map-combined groupBy(dst) + one driver scalar)
     timed best-of-N warm. This is the iterative join+agg shape — a
@@ -440,54 +362,12 @@ def run_pagerank(cpus: int, n_edges: int, repeats: int = 3) -> dict:
     }
 
 
-def run_pagerank_scaling() -> None:
-    """north_rule evidence on the GRAPH axis: the same 5-iteration
-    PageRank over the same edge table at local[8] and local[32],
-    alternating launches min-merged, plus a quarter-input 8-core run
-    for weak scaling."""
-    def probe(cpus: int, edges: int) -> dict:
-        env = dict(os.environ, SPARK_GRAFT_CPUS=str(cpus),
-                   SPARK_GRAFT_BENCH_EDGES=str(edges))
-        out = subprocess.run(
-            [sys.executable, __file__, "--pagerank"], env=env,
-            capture_output=True, text=True, check=True)
-        return json.loads(out.stdout.strip().splitlines()[-1])
-
-    n_edges = int(os.environ.get("SPARK_GRAFT_BENCH_EDGES", "2000000"))
-    runs_8, runs_32 = [], []
-    for _ in range(2):
-        runs_32.append(probe(32, n_edges))
-        runs_8.append(probe(8, n_edges))
-    weak_8 = probe(8, n_edges // 4)
-    s8 = min(r["sec"] for r in runs_8)
-    s32 = min(r["sec"] for r in runs_32)
-    strong_eff = s8 / s32 / 4.0
-    weak_eff = weak_8["sec"] / s32
-    print(json.dumps({
-        "metric": "pagerank_scaling_8_to_32_cores",
-        "value": round(strong_eff, 3), "unit": "ratio",
-        "edges": runs_32[0]["edges"],
-        "sec_8": s8, "sec_32": s32,
-        "sec_8_quarter": weak_8["sec"],
-        "edges_per_sec_32": round(runs_32[0]["edges"] / s32, 1),
-        "strong_eff": round(strong_eff, 3),
-        "weak_eff": round(weak_eff, 3),
-        "host_anchor": _host_anchor(),
-    }))
-
-
 if __name__ == "__main__":
-    if "--host-ceiling" in sys.argv:
-        print(json.dumps(run_host_ceiling()))
-    elif "--rels-sweep" in sys.argv:
+    if "--rels-sweep" in sys.argv:
         print(json.dumps(run_rels_sweep(CPUS)))
-    elif "--curate-scaling" in sys.argv:
-        run_curate_scaling()
     elif "--curate" in sys.argv:
         n = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "200000"))
         print(json.dumps(run_curate(CPUS, n)))
-    elif "--pagerank-scaling" in sys.argv:
-        run_pagerank_scaling()
     elif "--pagerank" in sys.argv:
         n = int(os.environ.get("SPARK_GRAFT_BENCH_EDGES", "2000000"))
         print(json.dumps(run_pagerank(CPUS, n)))

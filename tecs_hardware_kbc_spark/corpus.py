@@ -77,15 +77,6 @@ class Corpus:
     gazetteer: list[tuple[str, str]] = field(default_factory=list)  # (part, url)
 
 
-def doc_key(url: str) -> str:
-    """Document identity = uppercased stem of the url path (the Spark analog
-    of fonduer's ``document.name.upper()``)."""
-    stem = url.rsplit("/", 1)[-1]
-    if stem.endswith(".html"):
-        stem = stem[:-5]
-    return stem.upper()
-
-
 def _part_family(rng: random.Random, i: int) -> list[str]:
     """Page i's part family. The numeric core 100 + 4*(i mod 24975) is
     unique per page within a 24975-page block (stride 4 leaves room for up

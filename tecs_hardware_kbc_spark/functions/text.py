@@ -1,11 +1,10 @@
-"""Tokenization + n-gram helpers shared by the parse and mention layers.
+"""Tokenization shared by the parse layer.
 
 The reference delegates tokenization to fonduer/spaCy; our contract is only
-that tokenization is *deterministic* and that the ngram space re-splits
-tokens on ``-`` and ``/`` (``MentionNgrams(split_tokens=["-", "/"])``,
-``hack/transistors/transistors.py:205-241``). We use whitespace tokenization
-— byte-stable across platforms, no model downloads — which is exactly what
-the byte-identical-text invariant needs.
+that tokenization is *deterministic* (the ngram space's re-split of tokens on
+``-`` and ``/`` lives in ``operators.extract.grams_col``). We use whitespace
+tokenization — byte-stable across platforms, no model downloads — which is
+exactly what the byte-identical-text invariant needs.
 """
 
 from __future__ import annotations
@@ -13,39 +12,8 @@ from __future__ import annotations
 import re
 
 _WS_RE = re.compile(r"\s+")
-_SPLIT_CHARS = ("-", "/")
 
 
 def tokenize(text: str) -> list[str]:
     """Deterministic whitespace tokenization."""
     return [t for t in _WS_RE.split(text) if t]
-
-
-def split_subtokens(token: str) -> list[str]:
-    """Sub-tokens produced by re-splitting on '-' and '/' (excluding the
-    token itself); mirrors fonduer's split_tokens behavior where 'BC546A/B'
-    also contributes the grams 'BC546A' and 'B'."""
-    parts = [token]
-    for ch in _SPLIT_CHARS:
-        nxt: list[str] = []
-        for p in parts:
-            nxt.extend(p.split(ch))
-        parts = nxt
-    return [p for p in parts if p and p != token]
-
-
-def ngrams(words: list[str], n_min: int = 1, n_max: int = 3) -> list[str]:
-    """Space-joined word n-grams in reading order."""
-    out: list[str] = []
-    for n in range(n_min, min(n_max, len(words)) + 1):
-        for i in range(len(words) - n + 1):
-            out.append(" ".join(words[i : i + n]))
-    return out
-
-
-def char_ngrams(text: str, n: int = 3) -> list[str]:
-    """Character shingles for minhash/jaccard dedup (lowercased, ws-collapsed)."""
-    s = _WS_RE.sub(" ", text.lower()).strip()
-    if len(s) < n:
-        return [s] if s else []
-    return [s[i : i + n] for i in range(len(s) - n + 1)]

@@ -72,30 +72,6 @@ def build_row_spread(row_ngrams: DataFrame, spread: int) -> DataFrame:
     )
 
 
-def build_sentence_ngrams(sentences: DataFrame) -> DataFrame:
-    """(url, position) -> gram spans of the sentence and its neighbors.
-
-    ``neighbor_grams`` covers fonduer's ``get_neighbor_sentence_ngrams``
-    (previous + next sentence in reading order) via a window — one shuffle
-    on url, no self-join.
-    """
-    from pyspark.sql.window import Window
-
-    from tecs_hardware_kbc_spark.operators.extract import grams_col
-
-    w = Window.partitionBy("url").orderBy("position")
-    spans = F.transform(grams_col(), lambda g: g["span"])
-    return sentences.select(
-        "url",
-        "position",
-        spans.alias("sent_grams"),
-        F.concat(
-            F.coalesce(F.lag(spans, 1).over(w), F.array()),
-            F.coalesce(F.lead(spans, 1).over(w), F.array()),
-        ).alias("neighbor_grams"),
-    )
-
-
 def build_head_grams(grams: DataFrame, axis: str) -> DataFrame:
     """Grams of the head cell along an axis (fonduer ``get_head_ngrams`` /
     ``_get_head_cell``, used by ``LF_head_ends_with_ceo`` and

@@ -469,9 +469,8 @@ def minhash_index(docs: DataFrame, id_col: str = "doc_id",
     every later increment joins against it instead of re-shingling
     10^12 historical documents. Write it partitioned by ``band`` and
     bucketed/sorted by ``bucket`` (Iceberg ``bucket(bucket, N)``
-    transform or parquet ``bucketBy`` — same declaration as
-    plans/bucketing.py) so the increment join below is storage-
-    partitioned: the index side never shuffles, ever."""
+    transform or parquet ``bucketBy``) so the increment join below is
+    storage-partitioned: the index side never shuffles, ever."""
     return banded_buckets(
         minhash_signatures_arr(docs, id_col, text_col, n, num_hashes),
         bands, num_hashes)

@@ -270,18 +270,9 @@ def parse_figures(pages: DataFrame) -> DataFrame:
 _PUNCT_RGX = r"^[.,;:!?()\[\]{}\"']+|[.,;:!?()\[\]{}\"']+$"
 
 
-def grams_col(words=None, offsets=None, lean=False):
+def grams_col(words=None, offsets=None):
     """The sentence's mention n-gram space as a pure JVM column expression
     (array<struct<span, wi, n, char_start, char_end>>).
-
-    ``lean=True`` stores NULL instead of the span text for word n-grams
-    (n >= 1) — their span is exactly ``array_join(slice(words, wi+1, n),
-    " ")`` and can be reconstructed at explode time for ~nothing, while
-    NOT allocating one string per gram here cuts the HOF + cache cost of
-    the materialized gram table ~2.6x at 32 cores (the per-gram span
-    strings were the memory-bandwidth/GC bottleneck of the whole
-    datapath). Derived sub-token/stripped grams (n == 0) always carry
-    their span — those are substrings not recoverable by slicing.
 
     Mirrors fonduer's ``MentionNgrams(n_max=3, split_tokens=["-", "/"])``
     (``transistors.py:205-241``): all word 1..3-grams with char offsets,
@@ -312,15 +303,10 @@ def grams_col(words=None, offsets=None, lean=False):
 
     idx = F.sequence(F.lit(0), F.size(words) - 1)
 
-    def word_span(i, n):
-        if lean:
-            return F.lit(None).cast("string")
-        return F.array_join(F.slice(words, i + 1, n), " ")
-
     word_grams = F.flatten(F.transform(idx, lambda i: F.transform(
         F.sequence(F.lit(1), F.least(F.lit(NGRAM_MAX), F.size(words) - i)),
         lambda n: gram(
-            word_span(i, n), i, n,
+            F.array_join(F.slice(words, i + 1, n), " "), i, n,
             F.element_at(offs, (i + 1).cast("int")),
             F.element_at(offs, (i + n).cast("int"))
             + F.length(F.element_at(words, (i + n).cast("int"))) - 1,
@@ -351,10 +337,6 @@ def grams_col(words=None, offsets=None, lean=False):
     )))
 
     return F.concat(word_grams, sub_grams, strip_grams)
-
-
-def with_grams(sentences: DataFrame) -> DataFrame:
-    return sentences.withColumn("grams", grams_col())
 
 
 def parse_pages(pages: DataFrame) -> DataFrame:

@@ -89,12 +89,9 @@ def build_sentence_context(sentences: DataFrame,
 
     w = Window.partitionBy("url").orderBy("position")
     if compact is not None:
-        from tecs_hardware_kbc_spark.operators.mentions import gram_span
         base = compact.select(
             "url", "position", F.col("words").alias("_words"),
-            F.transform(
-                "_grams",
-                lambda g: gram_span(g, F.col("words"))).alias("_sent_grams"))
+            F.transform("_grams", lambda g: g["span"]).alias("_sent_grams"))
     else:
         per_sent = grams.groupBy("url", "position").agg(
             F.collect_list("raw_span").alias("_sent_grams"))

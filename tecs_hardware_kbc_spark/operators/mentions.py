@@ -68,8 +68,7 @@ MENTION_COLS = ["url", "position", "mention_type", "span", "raw_span",
                 "row", "col", "tag", "page", "is_tabular"]
 
 
-def gram_space_compact(sentences: DataFrame,
-                       lean: bool = False) -> DataFrame:
+def gram_space_compact(sentences: DataFrame) -> DataFrame:
     """The COMPACT one-row-per-sentence gram table: context columns + the
     sentence's ``words`` + an array of gram structs, HOF evaluated once and
     localCheckpointed. The context columns are stored once per sentence
@@ -78,55 +77,22 @@ def gram_space_compact(sentences: DataFrame,
     arrays directly (``build_sentence_context`` derives per-sentence gram
     lists with a ``transform`` — no groupBy shuffle of the exploded rows).
 
-    ``lean=True`` drops the word-gram span strings from the checkpoint
-    (reconstructed at read via ``gram_span``). That makes the checkpoint
-    BUILD ~2.6x faster (the span allocations are its memory-bandwidth
-    cost), but every downstream branch that reads ``raw_span`` then pays
-    the array_join reconstruction per evaluation — measured a net 1.6x
-    END-TO-END LOSS on the fused datapath, where the gram view is
-    consumed lazily by many unmaterialized branches (same-window A/B,
-    BENCH.md caveats). Default is therefore the span-materializing form;
-    lean suits only flows that checkpoint every consumer once."""
+    ``n == 0`` marks sub-token / punctuation-stripped grams."""
     from tecs_hardware_kbc_spark.operators.extract import grams_col
 
     offsets = (F.col("char_offsets")
                if "char_offsets" in sentences.columns else None)
-    gc = grams_col(offsets=offsets, lean=lean)
+    gc = grams_col(offsets=offsets)
     return sentences.select(*_CTX_COLS, "words", gc.alias("_grams")) \
                     .localCheckpoint()
 
 
-def gram_span(g, words):
-    """A (possibly lean) gram struct's span text: stored for derived
-    (n == 0) grams, ``array_join(slice(words, wi+1, n))`` otherwise."""
-    return F.coalesce(
-        g["span"],
-        F.array_join(F.slice(words, g["wi"] + 1, g["n"]), " "))
-
-
-def explode_gram_arrays(arr: DataFrame, lean: bool = False) -> DataFrame:
-    """The exploded gram view over a ``gram_space_compact`` table. Callers
-    MUST NOT checkpoint the result — that would re-inflate the compact
-    cache 25x.
-
-    For a lean table, spans are reconstructed INSIDE the array transform,
-    before the explode: the Generate node then emits concrete span values
-    and every downstream reference is a plain attribute read.
-    Reconstructing after the explode instead would let Catalyst's
-    project-collapsing inline the slice+join into EVERY filter that
-    touches ``raw_span`` (part_mentions alone reads it 5+ times) —
-    measured 2.6x slower end-to-end."""
-    if lean:
-        full = F.transform(
-            "_grams",
-            lambda g: F.struct(
-                gram_span(g, F.col("words")).alias("span"),
-                g["wi"].alias("wi"), g["n"].alias("n"),
-                g["char_start"].alias("char_start"),
-                g["char_end"].alias("char_end")))
-        g = arr.select(*_CTX_COLS, F.explode(full).alias("g"))
-    else:
-        g = arr.select(*_CTX_COLS, F.explode("_grams").alias("g"))
+def explode_gram_arrays(arr: DataFrame) -> DataFrame:
+    """The exploded gram view over a ``gram_space_compact`` table: the
+    full gram table every matcher and context builder reads, each with a
+    cheap ``n`` filter. Callers MUST NOT checkpoint the result — that
+    would re-inflate the compact cache 25x."""
+    g = arr.select(*_CTX_COLS, F.explode("_grams").alias("g"))
     return g.select(
         *_CTX_COLS,
         F.col("g.span").alias("raw_span"),
@@ -158,7 +124,7 @@ def pregate_polarity(g, span):
     return (g["n"] <= 1) & F.regexp_like(span, F.lit("(?i)^[NP]"))
 
 
-def gated_grams(compact: DataFrame, gate, lean: bool = False) -> DataFrame:
+def gated_grams(compact: DataFrame, gate) -> DataFrame:
     """Exploded gram view that filters INSIDE the compact arrays before
     exploding: only grams passing ``gate(struct, span)`` are ever
     materialized as rows. The explode is where the 8 context columns get
@@ -167,36 +133,9 @@ def gated_grams(compact: DataFrame, gate, lean: bool = False) -> DataFrame:
     traffic. Each gate is a strict SUPERSET of its matcher's own first
     filter (which still runs), so results are identical (pinned by
     test_mentions equivalence)."""
-    span_of = (lambda g: gram_span(g, F.col("words"))) if lean \
-        else (lambda g: g["span"])
     arr = compact.withColumn(
-        "_grams", F.filter("_grams", lambda g: gate(g, span_of(g))))
-    return explode_gram_arrays(arr, lean=lean)
-
-
-def gram_space(sentences: DataFrame, materialize: bool = False) -> DataFrame:
-    """The FULL exploded gram table (computed once per corpus and shared by
-    every matcher and context builder — each then applies a cheap ``n``
-    filter). ``n == 0`` = sub-token / punctuation-stripped grams.
-
-    ``materialize=True`` evaluates the gram HOF once via
-    ``gram_space_compact`` and explodes the cached arrays per consumer."""
-    from tecs_hardware_kbc_spark.operators.extract import grams_col
-
-    if materialize:
-        return explode_gram_arrays(gram_space_compact(sentences))
-    offsets = (F.col("char_offsets")
-               if "char_offsets" in sentences.columns else None)
-    g = sentences.select(*_CTX_COLS,
-                         F.explode(grams_col(offsets=offsets)).alias("g"))
-    return g.select(
-        *_CTX_COLS,
-        F.col("g.span").alias("raw_span"),
-        F.col("g.wi").alias("wi"),
-        F.col("g.n").alias("n"),
-        F.col("g.char_start").alias("char_start"),
-        F.col("g.char_end").alias("char_end"),
-    )
+        "_grams", F.filter("_grams", lambda g: gate(g, g["span"])))
+    return explode_gram_arrays(arr)
 
 
 def _n_filter(grams: DataFrame, n_min: int, n_max: int) -> DataFrame:

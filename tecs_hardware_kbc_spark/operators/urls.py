@@ -31,6 +31,7 @@ from pyspark.sql import Column, DataFrame
 import pyspark.sql.functions as F
 from pyspark.sql.window import Window
 
+from tecs_hardware_kbc_spark.functions.columns import let
 from tecs_hardware_kbc_spark.operators.sampling import hash_u
 
 # tracking parameters dropped by canonicalization (prefix match for
@@ -55,16 +56,21 @@ def url_host(url: Column) -> Column:
 def registered_domain(host: Column) -> Column:
     """Last two host labels, or three when the last two form a known
     two-level public suffix (co.uk et al. — the embedded PSL stand-in).
-    An IP literal is returned whole."""
-    parts = F.split(host, r"\.")
-    n = F.size(parts)
-    last2 = F.array_join(F.slice(parts, F.greatest(n - 1, F.lit(1)), 2), ".")
-    last3 = F.array_join(F.slice(parts, F.greatest(n - 2, F.lit(1)), 3), ".")
-    is_ip = host.rlike(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$")
-    two_level = F.array(*[F.lit(s) for s in TWO_LEVEL_SUFFIXES])
-    return (F.when(is_ip | (n <= 2), host)
-            .when(F.array_contains(two_level, last2), last3)
-            .otherwise(last2))
+    An IP literal is returned whole. ``host`` is evaluated once (``let``):
+    callers pass the composed ``url_host(url)`` expression."""
+    def body(h: Column) -> Column:
+        parts = F.split(h, r"\.")
+        n = F.size(parts)
+        last2 = F.array_join(
+            F.slice(parts, F.greatest(n - 1, F.lit(1)), 2), ".")
+        last3 = F.array_join(
+            F.slice(parts, F.greatest(n - 2, F.lit(1)), 3), ".")
+        is_ip = h.rlike(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$")
+        two_level = F.array(*[F.lit(s) for s in TWO_LEVEL_SUFFIXES])
+        return (F.when(is_ip | (n <= 2), h)
+                .when(F.array_contains(two_level, last2), last3)
+                .otherwise(last2))
+    return let(host, body)
 
 
 def canonicalize_url(url: Column) -> Column:

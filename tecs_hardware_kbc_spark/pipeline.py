@@ -323,8 +323,8 @@ def _fit_multitask(feats: dict[str, DataFrame]) -> dict[str, DataFrame]:
 
 
 def kbc_graph(relations: list[str], gold: bool = False,
-              canonicalize: bool = True, sweep: bool = True,
-              default_threshold: float = 0.5, supervision: str = "votes",
+              canonicalize: bool = True, default_threshold: float = 0.5,
+              supervision: str = "votes",
               visual_coords: DataFrame | None = None) -> list[Stage | Job]:
     """The KBC graph over the external tables ``pages`` and ``gazetteer``
     (plus ``gold`` entities and their per-(relation, dev slice)
@@ -379,7 +379,7 @@ def kbc_graph(relations: list[str], gold: bool = False,
         if components is not None:
             ents = canonicalize_entities(ents, components, on="doc")
         ents = ents.localCheckpoint()
-        if gold and sweep:
+        if gold:
             # dev-tune/test-report (reference protocol): b = argmax-F1 on
             # the dev doc slice; reported P/R/F1 comes from the disjoint
             # test slice at that b
@@ -435,8 +435,7 @@ def kbc_graph(relations: list[str], gold: bool = False,
     scored_inputs = (tuple(f"mentions_{k}" for k in MENTIONS)
                      + ("sentence_context", "row_ngrams", "col_ngrams"))
     tail_inputs = ((("components",) if canonicalize else ())
-                   + (("gold",) if gold else ())
-                   + (("gold_totals",) if gold and sweep else ()))
+                   + (("gold", "gold_totals") if gold else ()))
     for rel in relations:
         nodes.append(Stage(
             f"scored_{rel}",
@@ -493,23 +492,21 @@ def materialize(nodes: list[Stage | Job], tables: dict, mat) -> dict:
 
 
 def _kbc(pages: DataFrame, gazetteer: DataFrame, gold: DataFrame | None,
-         relations: list[str] | None, mat, sweep: bool = True,
-         **options) -> KBCResult:
+         relations: list[str] | None, mat, **options) -> KBCResult:
     """Run ``kbc_graph`` through the materializer ``mat``."""
     relations = relations or ALL_RELATIONS
     tables = {"pages": pages, "gazetteer": gazetteer}
     if gold is not None:
         tables["gold"] = gold_entities(gold).persist()
-        if sweep:
-            tables["gold_totals"] = {
-                (r["attribute"], r["_dev"]): r["n"]
-                for r in tables["gold"]
-                .withColumn("_dev", is_dev_doc(F.col("doc")))
-                .groupBy("attribute", "_dev")
-                .agg(F.count("*").alias("n")).collect()
-            }
-    t = materialize(kbc_graph(relations, gold=gold is not None, sweep=sweep,
-                              **options), tables, mat)
+        tables["gold_totals"] = {
+            (r["attribute"], r["_dev"]): r["n"]
+            for r in tables["gold"]
+            .withColumn("_dev", is_dev_doc(F.col("doc")))
+            .groupBy("attribute", "_dev")
+            .agg(F.count("*").alias("n")).collect()
+        }
+    t = materialize(kbc_graph(relations, gold=gold is not None, **options),
+                    tables, mat)
     finals = {rel: t[f"entities_{rel}"] for rel in relations}
     return KBCResult(
         triples=t["triples"],
@@ -526,7 +523,6 @@ def run_kbc(
     gold: DataFrame | None = None,
     relations: list[str] | None = None,
     canonicalize: bool = True,
-    sweep: bool = True,
     default_threshold: float = 0.5,
     supervision: str = "votes",
     visual_coords: DataFrame | None = None,
@@ -586,7 +582,7 @@ def run_kbc(
 
     try:
         return _kbc(pages, gazetteer, gold, relations, mat,
-                    canonicalize=canonicalize, sweep=sweep,
+                    canonicalize=canonicalize,
                     default_threshold=default_threshold,
                     supervision=supervision, visual_coords=visual_coords)
     except BaseException:

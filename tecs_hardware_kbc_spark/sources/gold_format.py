@@ -5,9 +5,9 @@ The reference ships ~3.5k LoC of driver-side CSV tooling
 `hack/opamps/data/utils/normalizers.py:12-139`) that melts raw
 Digi-Key/Mouser-style annotation rows — one WIDE row per part, one
 column per attribute — into the long (filename, manuf, part, attribute,
-value) gold CSV the pipeline consumes (`sources/gold.py`). This module
-is that formatter as ONE narrow DataFrame projection: the melt is an
-explode of (attribute, raw-cell) structs, multi-valued cells split on
+value) gold CSV the pipeline consumes (`pipeline.gold_entities`). This
+module is that formatter as ONE narrow DataFrame projection: the melt is
+an explode of (attribute, raw-cell) structs, multi-valued cells split on
 ';' and explode again, and every normalizer is a column expression —
 no UDF, no driver loop, so a 10^9-row annotation dump formats at scan
 speed with a single dedup shuffle at the end.

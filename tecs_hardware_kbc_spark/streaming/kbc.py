@@ -26,12 +26,10 @@ site changes.
 
 A recrawl of an already-extracted url is SKIPPED (extract-once
 semantics): triple extraction depends only on page content, and the
-reference corpus's datasheets are immutable once crawled. Content-
-changing recrawl handling belongs to ``streaming/stateful.py``'s CDC
-operator — compose it upstream to re-admit urls whose content hash
-moved, which then requires retracting that url's prior triples (an
-Iceberg MERGE / the snapshot table's ``overwrite``; out of scope for
-this append-only loop).
+reference corpus's datasheets are immutable once crawled. Re-admitting
+urls whose content moved would require retracting that url's prior
+triples (an Iceberg MERGE / the snapshot table's ``overwrite``; out of
+scope for this append-only loop).
 """
 
 from __future__ import annotations

@@ -163,7 +163,7 @@ def test_distractor_scores_below_genuine(spark, tiny_tables):
         relation_candidates)
 
     sentences = parse_pages(tiny_tables["pages"]).localCheckpoint()
-    grams = M.gram_space(sentences).localCheckpoint()
+    grams = M.explode_gram_arrays(M.gram_space_compact(sentences))
     ctx = build_context(grams)
     extra = build_ce_context(grams)
     ments = extract_mentions(grams, sentences, tiny_tables["gaz"], ctx)

@@ -29,8 +29,9 @@ def _sentences(spark):
 
 
 def _grams(spark):
-    from tecs_hardware_kbc_spark.operators.mentions import gram_space
-    return gram_space(_sentences(spark))
+    from tecs_hardware_kbc_spark.operators.mentions import (
+        explode_gram_arrays, gram_space_compact)
+    return explode_gram_arrays(gram_space_compact(_sentences(spark)))
 
 
 def test_row_ngrams(spark):

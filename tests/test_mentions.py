@@ -43,7 +43,7 @@ def ctx(spark):
         pd.DataFrame(rows, columns=[f.name for f in SENTENCE_SCHEMA.fields]),
         schema=SENTENCE_SCHEMA,
     ).cache()
-    grams = M.gram_space(sents).cache()
+    grams = M.explode_gram_arrays(M.gram_space_compact(sents)).cache()
     row = build_row_ngrams(grams).cache()
     return {
         "sents": sents, "grams": grams, "row": row,

@@ -48,7 +48,8 @@ def test_gazetteer_join_broadcasts(spark, corpus_dir):
     from tecs_hardware_kbc_spark.operators import mentions as M
     pages = read_pages(spark, f"{corpus_dir}/pages.parquet")
     gaz = spark.read.parquet(f"{corpus_dir}/gazetteer.parquet")
-    grams = M.gram_space(parse_pages(pages))
+    grams = M.explode_gram_arrays(
+        M.gram_space_compact(parse_pages(pages)))
     plan = _plan(M.part_mentions(grams, gaz))
     assert "BroadcastHashJoin" in plan or "BroadcastExchange" in plan
 
@@ -104,36 +105,9 @@ def test_part_expansion_vocab_broadcast_and_spread(spark, corpus_dir):
     from tecs_hardware_kbc_spark.operators import mentions as M
     from tecs_hardware_kbc_spark.operators.extract import parse_pages
     pages = read_pages(spark, f"{corpus_dir}/pages.parquet")
-    grams = M.gram_space(parse_pages(pages))
+    grams = M.explode_gram_arrays(
+        M.gram_space_compact(parse_pages(pages)))
     gaz = spark.createDataFrame([("BC546", "u")], "part string, url string")
     plan = _plan(M.part_mentions(grams, gaz))
     assert "BroadcastHashJoin" in plan
     assert "RoundRobinPartitioning" in plan  # the explicit vocab spread
-
-
-def test_bucketed_join_has_no_exchange(spark, corpus_dir, tmp_path_factory):
-    """Writing the join sides bucketed by url makes the candidate-style
-    equi-join shuffle-free: no Exchange on either side of the join."""
-    from tecs_hardware_kbc_spark.plans.bucketing import (
-        read_bucketed, write_bucketed)
-
-    pages = read_pages(spark, f"{corpus_dir}/pages.parquet")
-    a = pages.select("url", F.length("text").alias("n"))
-    b = pages.select("url", F.col("warc_ts"))
-    write_bucketed(a, "t_bucket_a", ["url"], n_buckets=8)
-    write_bucketed(b, "t_bucket_b", ["url"], n_buckets=8)
-    # at test scale the planner would broadcast (hiding the bucket
-    # benefit); force the sort-merge path a 100 TB join would take
-    thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = read_bucketed(spark, "t_bucket_a").join(
-            read_bucketed(spark, "t_bucket_b"), "url")
-        plan = _plan(joined)
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        assert joined.count() > 0
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thresh)
-        spark.sql("DROP TABLE IF EXISTS t_bucket_a")
-        spark.sql("DROP TABLE IF EXISTS t_bucket_b")

@@ -1,32 +1,14 @@
-"""Sinks (S6/S7) and unit-normalization functions."""
+"""Sinks (S6/S7)."""
 
 import os
 
 import pyspark.sql.functions as F
 
-from tecs_hardware_kbc_spark.functions.units import (
-    format_magnitude,
-    normalize_quantity,
-)
 from tecs_hardware_kbc_spark.sources.sinks import (
     write_discrepancies,
     write_prob_csv,
     write_triples,
 )
-
-
-def test_normalize_quantity():
-    from pytest import approx
-    assert normalize_quantity("1.1 MHz") == approx([1.1e6])
-    assert normalize_quantity("±15 mA") == approx([0.03, 0.015])  # doubled 1st
-    assert normalize_quantity("230 µA") == approx([230e-6])
-    assert normalize_quantity("-55 C") == approx([-55.0])
-    assert normalize_quantity("garbage text") == []
-
-
-def test_format_magnitude():
-    assert format_magnitude(1.1e6, "kHz") == "1100 kHz"
-    assert format_magnitude(230e-6, "µA") == "230 µA"
 
 
 def test_triples_sink_partitioned(spark, tmp_path):

@@ -33,253 +33,6 @@ def test_ingest_available_now(spark, tmp_path_factory):
     assert clean.count() == clean.select("url").distinct().count()
 
 
-def test_stateful_latest_crawl_cdc(spark, tmp_path_factory):
-    """applyInPandasWithState CDC: a url emits on first sight and on a
-    strictly newer crawl (with prev_ts), stays silent on stale replays,
-    and the state survives a stream restart via the checkpoint."""
-    import datetime as dt
-
-    from pyspark.sql.types import (BinaryType, StringType, StructField,
-                                   StructType, TimestampType)
-
-    from tecs_hardware_kbc_spark.streaming.stateful import (
-        streaming_latest_crawl)
-
-    base = tmp_path_factory.mktemp("stateful")
-    landing = str(base / "landing")
-    out = str(base / "updates")
-    ckpt = str(base / "ckpt")
-
-    schema = StructType([
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-        StructField("html", BinaryType(), True),
-    ])
-    t0 = dt.datetime(2024, 1, 1)
-    day = dt.timedelta(days=1)
-
-    def drain():
-        stream = (spark.readStream.schema(schema).parquet(landing))
-        # ttl=0 (NoTimeout): ProcessingTimeTimeout keeps the engine's
-        # shouldRunAnotherBatch true while any timeout is registered, so an
-        # availableNow drain would never terminate (see stateful.py docs)
-        (streaming_latest_crawl(stream, state_ttl_minutes=0).writeStream
-         .outputMode("update")
-         .foreachBatch(lambda b, i: b.write.mode("append").parquet(out))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start().awaitTermination())
-        return spark.read.parquet(out).collect()
-
-    spark.createDataFrame(
-        [("a", t0, b""), ("b", t0, b"")], schema
-    ).write.mode("append").parquet(landing)
-    rows = drain()
-    assert {(r["url"], r["n_crawls"]) for r in rows} == {("a", 1), ("b", 1)}
-    assert all(r["prev_ts"] is None for r in rows)
-
-    # batch 2: newer crawl of a, STALE replay of b -> only a emits
-    spark.createDataFrame(
-        [("a", t0 + day, b""), ("b", t0 - day, b"")], schema
-    ).write.mode("append").parquet(landing)
-    rows = drain()
-    emitted = [r for r in rows if r["n_crawls"] == 2]
-    assert {r["url"] for r in emitted} == {"a"}
-    a2 = emitted[0]
-    assert a2["prev_ts"] == t0 and a2["warc_ts"] == t0 + day
-
-
-class _FakeState:
-    """Minimal GroupState double for unit-testing the update function
-    (the live ProcessingTimeTimeout path can't run under availableNow —
-    see stateful.py's trigger caveat)."""
-
-    def __init__(self, value=None, timed_out=False):
-        self._value = value
-        self.hasTimedOut = timed_out
-        self.removed = False
-        self.timeout_ms = None
-
-    @property
-    def exists(self):
-        return self._value is not None
-
-    @property
-    def get(self):
-        return self._value
-
-    def update(self, v):
-        self._value = v
-
-    def remove(self):
-        self._value, self.removed = None, True
-
-    def setTimeoutDuration(self, ms):
-        self.timeout_ms = ms
-
-
-def test_stateful_ttl_unit():
-    """TTL registration, timeout eviction, and post-eviction re-register
-    as first sight — exercised directly on the update closure."""
-    import pandas as pd
-
-    from tecs_hardware_kbc_spark.streaming.stateful import _make_update
-
-    upd = _make_update(ttl_minutes=60)
-    ts = pd.Timestamp("2024-01-01")
-
-    # first sight: emits, registers a 60-minute timeout
-    st = _FakeState()
-    out = list(upd(("u",), iter([pd.DataFrame({"warc_ts": [ts]})]), st))
-    assert len(out) == 1 and out[0]["n_crawls"].iloc[0] == 1
-    assert st.timeout_ms == 60 * 60 * 1000 and st.exists
-
-    # stale replay: silent, but the timeout is re-armed (activity)
-    st.timeout_ms = None
-    out = list(upd(("u",), iter(
-        [pd.DataFrame({"warc_ts": [ts - pd.Timedelta(days=1)]})]), st))
-    assert out == [] and st.timeout_ms == 60 * 60 * 1000
-
-    # timeout fires: state evicted, nothing emitted
-    st.hasTimedOut = True
-    out = list(upd(("u",), iter([]), st))
-    assert out == [] and st.removed and not st.exists
-
-    # post-eviction crawl re-registers as first sight (documented tradeoff)
-    st = _FakeState()
-    out = list(upd(("u",), iter([pd.DataFrame({"warc_ts": [ts]})]), st))
-    assert len(out) == 1 and out[0]["prev_ts"].isna().iloc[0]
-
-    # ttl=0 path never registers a timeout
-    upd0 = _make_update(ttl_minutes=0)
-    st = _FakeState()
-    list(upd0(("u",), iter([pd.DataFrame({"warc_ts": [ts]})]), st))
-    assert st.timeout_ms is None
-
-
-def test_crawl_rate_windowed_watermark(spark, tmp_path_factory):
-    """Event-time windowed counts under a watermark: closed windows emit
-    exactly once (append mode), open tail windows stay in state, and a
-    row later than the checkpointed watermark is dropped, not re-opened."""
-    import datetime as dt
-
-    from pyspark.sql.types import (StringType, StructField, StructType,
-                                   TimestampType)
-
-    from tecs_hardware_kbc_spark.streaming.windows import crawl_rate
-
-    base = tmp_path_factory.mktemp("cr")
-    landing = str(base / "landing")
-    out = str(base / "rates")
-    ckpt = str(base / "ckpt")
-
-    schema = StructType([
-        StructField("url", StringType(), False),
-        StructField("warc_ts", TimestampType(), False),
-    ])
-    t0 = dt.datetime(2024, 1, 1)
-
-    def ts(h, m=0):
-        return t0 + dt.timedelta(hours=h, minutes=m)
-
-    def drain():
-        stream = spark.readStream.schema(schema).parquet(landing)
-        (crawl_rate(stream, "1 hour", allowed_lateness="2 hours")
-         .writeStream.outputMode("append")
-         .foreachBatch(lambda b, i: b.write.mode("append").parquet(out))
-         .option("checkpointLocation", ckpt)
-         .trigger(availableNow=True).start().awaitTermination())
-        try:
-            return {(r["domain"], r["window_start"], r["n_crawls"])
-                    for r in spark.read.parquet(out).collect()}
-        except Exception:
-            return set()  # nothing emitted yet
-
-    spark.createDataFrame(
-        [("http://a.com/1", ts(0, 10)), ("http://a.com/2", ts(0, 20)),
-         ("http://a.com/1", ts(1, 10)), ("http://b.org/x", ts(0, 30)),
-         ("http://b.org/y", ts(5, 30))], schema
-    ).write.mode("append").parquet(landing)
-    drain()  # sets the checkpointed watermark to 05:30 - 2h = 03:30
-
-    # batch 2: a fresh row (advances event time) + a LATE row for the
-    # already-closed 00:00 window — beyond the watermark, must be dropped
-    spark.createDataFrame(
-        [("http://a.com/3", ts(6, 10)), ("http://a.com/9", ts(0, 40))],
-        schema
-    ).write.mode("append").parquet(landing)
-    got = drain()
-
-    # windows with end <= 03:30 emitted with pre-late-row counts
-    assert ("a.com", ts(0), 2) in got
-    assert ("a.com", ts(1), 1) in got
-    assert ("b.org", ts(0), 1) in got
-    # the late row did NOT reopen the 00:00 window (no count-3 version)
-    assert ("a.com", ts(0), 3) not in got
-    # open tail windows (05:00 b, 06:00 a) are withheld, still in state
-    domains_open = {(d, s) for (d, s, _) in got}
-    assert ("b.org", ts(5)) not in domains_open
-    assert ("a.com", ts(6)) not in domains_open
-
-    # the SAME operator over the data as a batch frame is the oracle for
-    # the closed windows' counts (minus the dropped late row)
-    batch = spark.createDataFrame(
-        [("http://a.com/1", ts(0, 10)), ("http://a.com/2", ts(0, 20)),
-         ("http://a.com/1", ts(1, 10)), ("http://b.org/x", ts(0, 30)),
-         ("http://b.org/y", ts(5, 30))], schema)
-    oracle = {(r["domain"], r["window_start"], r["n_crawls"])
-              for r in crawl_rate(batch).collect()
-              if r["window_end"] <= ts(3, 30)}
-    assert oracle == got
-
-
-def test_streaming_dedup_carries_index_across_drains(spark,
-                                                     tmp_path_factory):
-    """Continuous-crawl near-dedup: batch 2's near-copy of a batch-1
-    SURVIVOR is dropped against the persisted index (not re-shingled
-    history), uniques pass, and the index grows by survivors only."""
-    from pyspark.sql.types import (LongType, StringType, StructField,
-                                   StructType)
-
-    from tecs_hardware_kbc_spark.streaming.dedup import (
-        dedup_stream_available_now)
-
-    base = tmp_path_factory.mktemp("sdedup")
-    landing = str(base / "landing")
-    out = str(base / "docs_clean")
-    idx = str(base / "index")
-    ckpt = str(base / "ckpt")
-    schema = StructType([StructField("doc_id", LongType(), False),
-                         StructField("text", StringType(), False)])
-
-    theme_a = ("the quick brown fox jumps over the lazy dog and then "
-               "runs far away into the deep dark forest to hide")
-    theme_b = ("an entirely different report about volcanic islands "
-               "and their coral reef ecosystems in the warm pacific")
-
-    spark.createDataFrame(
-        [(1, theme_a), (3, theme_a.replace("lazy", "sleepy"))], schema
-    ).write.mode("append").parquet(landing)
-    dedup_stream_available_now(spark, landing, out, idx, ckpt, schema,
-                               threshold=0.5)
-    from tecs_hardware_kbc_spark.plans.snapshots import SnapshotTable
-    out_t, idx_t = SnapshotTable(spark, out), SnapshotTable(spark, idx)
-    assert {r["doc_id"] for r in out_t.read().collect()} == {1}
-
-    # 21 = doc 1 plus one trailing word: est_jaccard 0.94, shares 3 of 4
-    # band buckets with the index row (banding verified — an est ~0.56
-    # variant deterministically misses all 4 bands, which is LSH working
-    # as specified, not a dedup bug)
-    spark.createDataFrame(
-        [(21, theme_a + " tonight"),               # near-dups index doc 1
-         (23, theme_b)], schema
-    ).write.mode("append").parquet(landing)
-    dedup_stream_available_now(spark, landing, out, idx, ckpt, schema,
-                               threshold=0.5)
-    assert {r["doc_id"] for r in out_t.read().collect()} == {1, 23}
-    # index holds exactly the survivors, one row per (doc, band)
-    assert {r["doc_id"] for r in idx_t.read().collect()} == {1, 23}
-
-
 def test_kbc_stream_incremental_extraction(spark, tmp_path_factory):
     """Streaming KBC drain loop: extract-once per url (recrawls of
     already-extracted urls are skipped), triples snapshot-committed

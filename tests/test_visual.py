@@ -192,7 +192,7 @@ def test_wrapped_layout_disagrees_at_corpus_scale(spark, tmp_path_factory):
     pages, gold, gaz = distributed_corpus(spark, 120, seed=11, noise=False)
     sents = parse_pages(ingest(pages)).localCheckpoint()
     viz = synthetic_visual_coords(sents).localCheckpoint()
-    grams = M.gram_space(sents, materialize=True)
+    grams = M.explode_gram_arrays(M.gram_space_compact(sents))
     parts = M.part_mentions(grams, gaz).localCheckpoint()
     temps = M.temp_mentions(grams, "min").localCheckpoint()
 
