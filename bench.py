@@ -12,9 +12,9 @@ The per-layer profile of the real pipeline is ``perfbench/run.py --trace 1``.
 
 from __future__ import annotations
 
+import argparse
 import json
 import os
-import sys
 import time
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -363,12 +363,27 @@ def run_pagerank(cpus: int, n_edges: int, repeats: int = 3) -> dict:
 
 
 if __name__ == "__main__":
-    if "--rels-sweep" in sys.argv:
+    ap = argparse.ArgumentParser(
+        description="Headline suite at $SPARK_GRAFT_SF_DIR, or one probe; "
+                    "prints one JSON line.")
+    probe = ap.add_mutually_exclusive_group()
+    probe.add_argument("--rels-sweep", action="store_true",
+                       help="KBC wall time vs relation count (8000 "
+                            "pages)")
+    probe.add_argument("--curate", action="store_true",
+                       help="curation funnel over "
+                            "$SPARK_GRAFT_BENCH_DOCS documents")
+    probe.add_argument("--pagerank", action="store_true",
+                       help="5 PageRank iterations over "
+                            "$SPARK_GRAFT_BENCH_EDGES edges")
+    # parsed before any JVM starts: an unknown flag exits with code 2
+    args = ap.parse_args()
+    if args.rels_sweep:
         print(json.dumps(run_rels_sweep(CPUS)))
-    elif "--curate" in sys.argv:
+    elif args.curate:
         n = int(os.environ.get("SPARK_GRAFT_BENCH_DOCS", "200000"))
         print(json.dumps(run_curate(CPUS, n)))
-    elif "--pagerank" in sys.argv:
+    elif args.pagerank:
         n = int(os.environ.get("SPARK_GRAFT_BENCH_EDGES", "2000000"))
         print(json.dumps(run_pagerank(CPUS, n)))
     else:

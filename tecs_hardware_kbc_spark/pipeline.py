@@ -4,16 +4,17 @@ The reference's hard-coded operator DAG (parse -> mentions -> candidates ->
 featurize -> label -> models -> score, ``transistors.py:138-618``) is
 declared ONCE here, by ``kbc_graph``: a list of named nodes, each with the
 names of its inputs and a build function; Catalyst plans each one. Two
-materializers run that one graph:
+materializers run that one graph. Both build every stage's plan on the
+calling thread and run the Spark jobs in one 3-wide, job-tagged thread
+pool (``_job_pool``), each node as soon as its inputs are ready, so
+independent stages and the per-relation tails overlap:
 
-* ``run_kbc`` (in memory: tests, ``__spark_entry__``, streaming) builds
-  every plan on the calling thread and ``localCheckpoint``s the pinned
-  stages in a 3-wide thread pool, each node as soon as its inputs are
-  ready, so independent stages and the per-relation tails overlap;
-* ``run_kbc_checkpointed`` (bench + cluster runs) commits every stage, in
-  declared order, as a resumable parquet table with lineage and metrics
-  (``plans.lineage.StageRunner``); a resumed run skips every complete
-  stage without building its plan.
+* ``run_kbc`` (in memory: tests, ``__spark_entry__``, streaming)
+  ``localCheckpoint``s the pinned stages;
+* ``run_kbc_checkpointed`` (bench + cluster runs) commits every stage as
+  a resumable parquet table with lineage (``plans.lineage.StageRunner``),
+  and lists them in declared order in ``metrics.json``; a resumed run
+  re-opens every complete stage without building its plan.
 
 Differences that matter at scale:
 
@@ -30,6 +31,7 @@ from __future__ import annotations
 
 import uuid
 from collections.abc import Callable
+from contextlib import contextmanager
 from concurrent.futures import (
     FIRST_COMPLETED,
     Future,
@@ -251,9 +253,9 @@ def relation_entities(rel: str, scored: DataFrame,
 class Stage:
     """A table of the KBC graph: ``build(t)`` returns its plan from the
     resolved tables ``t``, on the thread that calls ``materialize``, and
-    runs no Spark job. ``run_kbc`` pins (localCheckpoints) it when ``pin``
-    is set and leaves it a lazy view otherwise; ``run_kbc_checkpointed``
-    commits every stage."""
+    runs no Spark job. In the shared pool, ``run_kbc`` pins
+    (localCheckpoints) it when ``pin`` is set and leaves it a lazy view
+    otherwise; ``run_kbc_checkpointed`` commits every stage."""
     name: str
     inputs: tuple[str, ...]
     build: Callable[[dict], DataFrame]
@@ -264,8 +266,8 @@ class Stage:
 @dataclass(frozen=True)
 class Job:
     """A node whose ``build(t)`` runs Spark jobs itself and returns any
-    value. It is never committed: ``run_kbc`` runs it in its pool,
-    ``run_kbc_checkpointed`` inline."""
+    value. It is never committed: both materializers run it in the shared
+    pool."""
     name: str
     inputs: tuple[str, ...]
     build: Callable[[dict], object]
@@ -492,7 +494,8 @@ def materialize(nodes: list[Stage | Job], tables: dict, mat) -> dict:
 
 
 def _kbc(pages: DataFrame, gazetteer: DataFrame, gold: DataFrame | None,
-         relations: list[str] | None, mat, **options) -> KBCResult:
+         relations: list[str] | None, mat,
+         **options) -> tuple[KBCResult, list[Stage | Job]]:
     """Run ``kbc_graph`` through the materializer ``mat``."""
     relations = relations or ALL_RELATIONS
     tables = {"pages": pages, "gazetteer": gazetteer}
@@ -505,15 +508,54 @@ def _kbc(pages: DataFrame, gazetteer: DataFrame, gold: DataFrame | None,
             .groupBy("attribute", "_dev")
             .agg(F.count("*").alias("n")).collect()
         }
-    t = materialize(kbc_graph(relations, gold=gold is not None, **options),
-                    tables, mat)
+    nodes = kbc_graph(relations, gold=gold is not None, **options)
+    t = materialize(nodes, tables, mat)
     finals = {rel: t[f"entities_{rel}"] for rel in relations}
     return KBCResult(
         triples=t["triples"],
         entities=_union([final for final, _, _ in finals.values()]),
         scores={rel: stats for rel, (_, _, stats) in finals.items()
                 if stats is not None},
-        thresholds={rel: b for rel, (_, b, _) in finals.items()})
+        thresholds={rel: b for rel, (_, b, _) in finals.items()}), nodes
+
+
+@contextmanager
+def _job_pool(spark: SparkSession):
+    """Yields ``submit(fn) -> Future``, which runs ``fn`` in a 3-wide pool
+    with its Spark jobs tagged for this call. Overlapping jobs hides
+    per-stage scheduling latency: 3 was the sweet spot at 8 and 32 cores,
+    8 doubled wall time on 8 cores. If the body raises, the error is
+    re-raised once every call has stopped: queued calls never start, and
+    the jobs of running ones are cancelled."""
+    sc = spark.sparkContext
+    # job tags are thread-local and, unlike job groups, leave a caller's
+    # group alone
+    tag = f"kbc-{uuid.uuid4().hex}"
+    pool = ThreadPoolExecutor(max_workers=3)
+    submitted: list[Future] = []
+
+    def submit(fn) -> Future:
+        def tagged():
+            sc.addJobTag(tag)
+            try:
+                return fn()
+            finally:
+                sc.removeJobTag(tag)
+        submitted.append(pool.submit(tagged))
+        return submitted[-1]
+
+    try:
+        yield submit
+    except BaseException:
+        pool.shutdown(wait=False, cancel_futures=True)
+        # a running call may start another job after a cancel: repeat it
+        # until every call has stopped
+        sc.cancelJobsWithTag(tag)
+        while wait(submitted, timeout=0.5).not_done:
+            sc.cancelJobsWithTag(tag)
+        raise
+    finally:
+        pool.shutdown(wait=False)
 
 
 def run_kbc(
@@ -541,60 +583,25 @@ def run_kbc(
     space -> shared-trunk multi-task LR trained on the weak labels ->
     model marginals, transistors.py:350-567; see ``_fit_multitask``).
 
-    If any node fails, the error is re-raised once every sibling has
-    stopped: queued nodes never start, and the Spark jobs of running ones
-    are cancelled.
+    If any node fails, the error is re-raised once its siblings have
+    stopped (``_job_pool``).
     """
     # localCheckpoint at every pinned stage: it caches AND truncates the
     # logical plan, so the ~30 downstream actions (per-relation sweeps,
     # counts) each plan against a flat LogicalRDD instead of re-analyzing
-    # the full parse->grams->LF lineage.
-    #
-    # Pinned stages and Job nodes run CONCURRENTLY in the pool (Spark's
-    # scheduler interleaves jobs): the dominant cost at moderate scale is
-    # per-stage scheduling latency, and overlapping jobs hides it while
-    # keeping every core busy. 3 concurrent jobs is the sweet spot
-    # measured at both 8 and 32 cores: enough overlap to hide stage
-    # latency, not enough to thrash the scheduler/caches (8 concurrent
-    # jobs doubled wall time on 8 cores).
-    sc = spark.sparkContext
-    # job tags are thread-local and, unlike job groups, leave a caller's
-    # group alone
-    tag = f"run_kbc-{uuid.uuid4().hex}"
-    pool = ThreadPoolExecutor(max_workers=3)
-    submitted: list[Future] = []
+    # the full parse->grams->LF lineage. Pinned stages and Job nodes run
+    # concurrently in the pool.
+    with _job_pool(spark) as in_pool:
+        def mat(node: Stage | Job, build):
+            if isinstance(node, Job):
+                return in_pool(build)
+            df = build()
+            return in_pool(df.localCheckpoint) if node.pin else df
 
-    def in_pool(fn) -> Future:
-        def tagged():
-            sc.addJobTag(tag)
-            try:
-                return fn()
-            finally:
-                sc.removeJobTag(tag)
-        submitted.append(pool.submit(tagged))
-        return submitted[-1]
-
-    def mat(node: Stage | Job, build):
-        if isinstance(node, Job):
-            return in_pool(build)
-        df = build()
-        return in_pool(df.localCheckpoint) if node.pin else df
-
-    try:
         return _kbc(pages, gazetteer, gold, relations, mat,
                     canonicalize=canonicalize,
                     default_threshold=default_threshold,
-                    supervision=supervision, visual_coords=visual_coords)
-    except BaseException:
-        pool.shutdown(wait=False, cancel_futures=True)
-        # a running node may start another job after a cancel: repeat it
-        # until every node has stopped
-        sc.cancelJobsWithTag(tag)
-        while wait(submitted, timeout=0.5).not_done:
-            sc.cancelJobsWithTag(tag)
-        raise
-    finally:
-        pool.shutdown(wait=False)
+                    supervision=supervision, visual_coords=visual_coords)[0]
 
 
 def run_kbc_checkpointed(spark: SparkSession, pages_path: str,
@@ -604,25 +611,34 @@ def run_kbc_checkpointed(spark: SparkSession, pages_path: str,
                          resume: bool = True,
                          visual_path: str | None = None) -> KBCResult:
     """Checkpointed variant: each stage is a resumable parquet table with
-    lineage + metrics (plans/lineage.py), committed in declared order.
-    Used by bench.py and spark-submit cluster runs.
+    lineage + metrics (plans/lineage.py). Used by bench.py and spark-submit
+    cluster runs.
 
     ``visual_path``: optional parquet sidecar of per-sentence bboxes
     (url, position, v_top/v_left/v_bottom/v_right) — same semantics as
     ``run_kbc(visual_coords=...)``."""
     runner = StageRunner(spark, out_dir, resume=resume)
 
-    def mat(node: Stage | Job, build):
-        if isinstance(node, Job):
-            return build()
-        return runner.run(node.name, build, inputs=list(node.inputs),
-                          partition_by=list(node.partition_by))
+    with _job_pool(spark) as in_pool:
+        # plans are built on this thread: the _once memos are not
+        # thread-safe
+        def mat(node: Stage | Job, build):
+            if isinstance(node, Job):
+                return in_pool(build)
+            inputs = list(node.inputs)
+            if (done := runner.reopen(node.name, inputs)) is not None:
+                return done
+            df = build()
+            return in_pool(partial(runner.run, node.name, lambda: df, inputs,
+                                   list(node.partition_by)))
 
-    result = _kbc(
-        spark.read.parquet(pages_path), spark.read.parquet(gazetteer_path),
-        spark.read.parquet(gold_path) if gold_path else None, relations, mat,
-        visual_coords=(spark.read.parquet(visual_path)
-                       if visual_path else None))
+        result, nodes = _kbc(
+            spark.read.parquet(pages_path), spark.read.parquet(gazetteer_path),
+            spark.read.parquet(gold_path) if gold_path else None, relations,
+            mat, visual_coords=(spark.read.parquet(visual_path)
+                                if visual_path else None))
+    declared = [n.name for n in nodes]
+    runner.metrics.sort(key=lambda m: declared.index(m["stage"]))
     runner.flush_metrics({"scores": result.scores,
                           "thresholds": result.thresholds})
     return result

@@ -7,9 +7,10 @@ stage is an idempotent parquet table under ``<out_dir>/<stage>`` with a
 the Spark application id, and per-partition row counts + skew summary
 (min/max/avg rows per partition — the signal that tells an operator which
 stage needs salting). ``StageRunner.run`` skips recomputation when the
-checkpoint is complete (parquet ``_SUCCESS`` + lineage present) — the
-parquet-backed analog of Iceberg snapshot commits (swap the writer for
-``writeTo(...).createOrReplace()`` on a cluster with an Iceberg catalog).
+checkpoint is complete (parquet ``_SUCCESS`` + lineage present, from the
+same input stages) — the parquet-backed analog of Iceberg snapshot
+commits (swap the writer for ``writeTo(...).createOrReplace()`` on a
+cluster with an Iceberg catalog).
 
 Metrics accumulate in ``<out_dir>/metrics.json`` — the analog of the
 reference's committed ``fonduer.log`` stage timings (BASELINE.md).
@@ -22,6 +23,7 @@ import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
+import pyspark.sql.functions as F
 
 
 class StageRunner:
@@ -39,11 +41,24 @@ class StageRunner:
     def _lineage_path(self, stage: str) -> str:
         return os.path.join(self.out_dir, f"{stage}._lineage.json")
 
-    def is_complete(self, stage: str) -> bool:
-        return (
-            os.path.exists(os.path.join(self._path(stage), "_SUCCESS"))
-            and os.path.exists(self._lineage_path(stage))
-        )
+    def is_complete(self, stage: str, inputs: list[str] | None = None) -> bool:
+        """``_SUCCESS`` and lineage present, and, given ``inputs``, built
+        from exactly those (more relations rebuild ``triples``)."""
+        lineage = self._lineage_path(stage)
+        if not (os.path.exists(os.path.join(self._path(stage), "_SUCCESS"))
+                and os.path.exists(lineage)):
+            return False
+        if inputs is None:
+            return True
+        with open(lineage) as f:
+            return json.load(f)["inputs"] == inputs
+
+    def reopen(self, stage: str, inputs: list[str] | None = None):
+        """The complete stage's table when resuming, else None."""
+        if not (self.resume and self.is_complete(stage, inputs)):
+            return None
+        self.metrics.append({"stage": stage, "skipped": True})
+        return self.spark.read.parquet(self._path(stage))
 
     def run(self, stage: str, build, inputs: list[str] | None = None,
             partition_by: list[str] | None = None) -> DataFrame:
@@ -52,10 +67,10 @@ class StageRunner:
         ``build`` is a thunk returning the stage DataFrame — only invoked on
         a cache miss, so resumed runs never even construct skipped plans.
         """
+        out = self.reopen(stage, inputs)
+        if out is not None:
+            return out
         path = self._path(stage)
-        if self.resume and self.is_complete(stage):
-            self.metrics.append({"stage": stage, "skipped": True})
-            return self.spark.read.parquet(path)
         t0 = time.monotonic()
         df = build()
         writer = df.write.mode("overwrite")
@@ -63,18 +78,16 @@ class StageRunner:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         out = self.spark.read.parquet(path)
-        rows = out.count()
-        wall = time.monotonic() - t0
         # per-partition lineage (north_rule): row count per scan partition,
         # plus the skew summary that tells an operator which stage needs
         # salting. The full histogram is recorded while small; above 512
         # partitions only the summary is kept.
-        import pyspark.sql.functions as F
         per_part = sorted(
             (r["p"], r["n"]) for r in
             out.groupBy(F.spark_partition_id().alias("p"))
             .count().withColumnRenamed("count", "n").collect()
         )
+        wall = time.monotonic() - t0
         counts = [n for _, n in per_part]
         skew = {
             "n_partitions": len(counts),
@@ -84,10 +97,11 @@ class StageRunner:
         }
         lineage = {
             "stage": stage,
-            "rows": rows,
+            "rows": sum(counts),
             "wall_s": round(wall, 3),
             "inputs": inputs or [],
             "app_id": self.spark.sparkContext.applicationId,
+            # no job, and set for an all-empty stage too
             "partitions": out.rdd.getNumPartitions(),
             "partition_skew": skew,
             "partition_rows": dict(per_part) if len(counts) <= 512 else None,

@@ -106,22 +106,35 @@ def test_ingest_drops_url_whose_latest_crawl_is_foreign(spark):
     assert got == {"http://b": "new"}
 
 
+def _declared_stages(relations, **options):
+    return [n.name for n in kbc_graph(relations, **options)
+            if isinstance(n, Stage)]
+
+
+def _listed_stages(out: str) -> list[dict]:
+    with open(f"{out}/metrics.json") as f:
+        return json.load(f)["stages"]
+
+
 def test_checkpoint_resume(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("kbc"))
     write_corpus(spark, f"{base}/corpus", n_pages=12, seed=5)
     args = (f"{base}/corpus/pages.parquet", f"{base}/corpus/gazetteer.parquet",
             f"{base}/out")
+    declared = _declared_stages(ALL_RELATIONS, gold=True)
     r1 = run_kbc_checkpointed(spark, *args,
                               gold_path=f"{base}/corpus/gold.parquet")
     fresh = digests(r1.triples)
+    # commits finish out of order in the pool; metrics.json lists the
+    # stages of the one declared graph in declared order
+    stages = _listed_stages(f"{base}/out")
+    assert [s["stage"] for s in stages] == declared
+    assert not any(s.get("skipped") for s in stages)
     r2 = run_kbc_checkpointed(spark, *args,
                               gold_path=f"{base}/corpus/gold.parquet")
-    metrics = json.load(open(f"{base}/out/metrics.json"))
-    assert all(s.get("skipped") for s in metrics["stages"])
-    # the stages of the one declared graph, committed in declared order
-    assert [s["stage"] for s in metrics["stages"]] == [
-        n.name for n in kbc_graph(ALL_RELATIONS, gold=True)
-        if isinstance(n, Stage)]
+    stages = _listed_stages(f"{base}/out")
+    assert all(s.get("skipped") for s in stages)
+    assert [s["stage"] for s in stages] == declared
     # the in-memory materialization of the same graph: same triples
     batch = run_kbc(spark, *(spark.read.parquet(f"{base}/corpus/{t}.parquet")
                              for t in ("pages", "gazetteer", "gold")))
@@ -129,15 +142,51 @@ def test_checkpoint_resume(spark, tmp_path_factory):
     # triples written partitioned by predicate
     parts = os.listdir(f"{base}/out/triples")
     assert any(p.startswith("pred=") for p in parts)
-    # per-partition lineage sidecars (north_rule): row counts + skew
-    lin = json.load(open(f"{base}/out/sentences._lineage.json"))
-    assert lin["partition_skew"]["n_partitions"] >= 1
-    assert sum(lin["partition_rows"].values()) == lin["rows"]
+    # per-partition lineage sidecars (north_rule): row counts + skew, for
+    # every committed stage
+    for stage in declared:
+        with open(f"{base}/out/{stage}._lineage.json") as f:
+            lin = json.load(f)
+        assert lin["partition_skew"]["n_partitions"] >= 1, stage
+        assert sum(lin["partition_rows"].values()) == lin["rows"], stage
+        assert lin["partitions"] >= lin["partition_skew"]["n_partitions"], \
+            stage
 
 
-def test_failing_relation_cancels_siblings(spark, tiny_tables, monkeypatch):
+def test_resume_with_more_relations_rebuilds_triples(spark,
+                                                     tmp_path_factory):
+    """A resume over a superset of the relations builds only the missing
+    stages: the new relation's scored table and the triples that union
+    every relation's entities; its triples equal run_kbc's."""
+    base = str(tmp_path_factory.mktemp("kbcmore"))
+    write_corpus(spark, f"{base}/corpus", n_pages=12, seed=5)
+    args = (f"{base}/corpus/pages.parquet", f"{base}/corpus/gazetteer.parquet",
+            f"{base}/out")
+    gold_path = f"{base}/corpus/gold.parquet"
+    run_kbc_checkpointed(spark, *args, gold_path=gold_path,
+                         relations=["stg_temp_max"])
+    relations = ["stg_temp_max", "polarity"]
+    resumed = run_kbc_checkpointed(spark, *args, gold_path=gold_path,
+                                   relations=relations)
+    stages = _listed_stages(f"{base}/out")
+    assert [s["stage"] for s in stages] == _declared_stages(relations,
+                                                            gold=True)
+    assert [s["stage"] for s in stages if not s.get("skipped")] == [
+        "scored_polarity", "triples"]
+    batch = run_kbc(spark, *(spark.read.parquet(f"{base}/corpus/{t}.parquet")
+                             for t in ("pages", "gazetteer", "gold")),
+                    relations=relations)
+    got = digests(resumed.triples)
+    assert set(got) == set(relations)
+    assert got == digests(batch.triples)
+
+
+@pytest.mark.parametrize("entry", ["run_kbc", "run_kbc_checkpointed"])
+def test_failing_relation_cancels_siblings(spark, tiny_tables, monkeypatch,
+                                           tmp_path, entry):
     """One relation's failure is re-raised and stops its siblings' Spark
-    jobs, which here would otherwise run for minutes."""
+    jobs, which here would otherwise run for minutes; both materializers
+    share the pool that cancels them."""
     tracker = spark.sparkContext.statusTracker()
     apply_lfs = pipeline.apply_lfs
     # one second per candidate row: the siblings' jobs outlive the test
@@ -155,11 +204,22 @@ def test_failing_relation_cancels_siblings(spark, tiny_tables, monkeypatch):
             raise RuntimeError("injected LF failure")
         return apply_lfs(df, rel).filter(slow(F.col("prob")))
 
+    relations = ["stg_temp_min", "stg_temp_max", "polarity"]
+    if entry == "run_kbc":
+        def run():
+            run_kbc(spark, tiny_tables["pages"], tiny_tables["gaz"],
+                    relations=relations, canonicalize=False)
+    else:
+        for t in ("pages", "gaz"):
+            tiny_tables[t].write.parquet(f"{tmp_path}/{t}")
+
+        def run():
+            run_kbc_checkpointed(spark, f"{tmp_path}/pages",
+                                 f"{tmp_path}/gaz", f"{tmp_path}/out",
+                                 relations=relations)
     monkeypatch.setattr(pipeline, "apply_lfs", flaky)
     with pytest.raises(RuntimeError, match="injected LF failure"):
-        run_kbc(spark, tiny_tables["pages"], tiny_tables["gaz"],
-                relations=["stg_temp_min", "stg_temp_max", "polarity"],
-                canonicalize=False)
+        run()
     assert siblings_ran == [True]
     # drained within seconds, and no sibling starts another job after
     # (AQE runs one query as several jobs, with short gaps between them)
