@@ -18,7 +18,7 @@ cannot make for us before stats exist, so patterns are greedily
 ordered most-constants-first and then connectivity-first (never join
 two scans with no shared variable unless the BGP is genuinely
 disconnected) — constants prune via the pred-partitioned triple sink
-(``sources/sinks.py`` partitions by pred, so a constant-predicate
+(``plans/snapshots.py`` partitions by pred, so a constant-predicate
 pattern is a partition-pruned scan at 100 TB, the classic vertical-
 partitioning win).
 

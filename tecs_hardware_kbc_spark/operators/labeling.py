@@ -72,35 +72,23 @@ _EXTRA_JOINS: dict[str, tuple[str, str, str, list[tuple[str, str]]]] = {
 }
 
 
-def build_sentence_context(sentences: DataFrame,
-                           grams: DataFrame,
-                           compact: DataFrame | None = None) -> DataFrame:
+def build_sentence_context(sentences: DataFrame, grams: DataFrame, *,
+                           compact: DataFrame) -> DataFrame:
     """(url, position, words, sent grams, neighbor-sentence grams) — built
     once per corpus and shared by every relation that probes sentence-level
     context. Every consumer reads the gram lists by MEMBERSHIP (overlaps /
     array_contains), so their order is free.
 
-    With ``compact`` (a ``gram_space_compact`` table) the per-sentence gram
-    list is a ``transform`` over the cached gram arrays — ONE window
+    The per-sentence gram list is a ``transform`` over the cached gram
+    arrays of ``compact`` (a ``gram_space_compact`` table): ONE window
     shuffle total, no groupBy of the 25x-larger exploded rows and no join
-    back to the sentences. Without it, falls back to collect_list over the
-    exploded ``grams`` (one groupBy + one join + one window)."""
+    back to the sentences. ``sentences`` and ``grams`` are unread."""
     from pyspark.sql.window import Window
 
     w = Window.partitionBy("url").orderBy("position")
-    if compact is not None:
-        base = compact.select(
-            "url", "position", F.col("words").alias("_words"),
-            F.transform("_grams", lambda g: g["span"]).alias("_sent_grams"))
-    else:
-        per_sent = grams.groupBy("url", "position").agg(
-            F.collect_list("raw_span").alias("_sent_grams"))
-        base = (
-            sentences.select("url", "position",
-                             F.col("words").alias("_words"))
-            .join(per_sent, ["url", "position"], "left")
-            .withColumn("_sent_grams", F.coalesce("_sent_grams", F.array()))
-        )
+    base = compact.select(
+        "url", "position", F.col("words").alias("_words"),
+        F.transform("_grams", lambda g: g["span"]).alias("_sent_grams"))
     return base.withColumn(
         "_neighbor_grams",
         F.concat(

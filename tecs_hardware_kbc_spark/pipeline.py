@@ -167,25 +167,13 @@ def gold_entities(gold: DataFrame) -> DataFrame:
 
 
 def extract_mentions(grams: DataFrame, sentences: DataFrame,
-                     gazetteer: DataFrame,
-                     ctx: dict[str, DataFrame],
-                     compact: DataFrame | None = None) -> dict[str, DataFrame]:
-    """Every ``MENTIONS`` table over ``grams``, or, given the compact gram
-    table, over each matcher's pre-gated subset of it."""
+                     gazetteer: DataFrame, ctx: dict[str, DataFrame], *,
+                     compact: DataFrame) -> dict[str, DataFrame]:
+    """Every ``MENTIONS`` table, each over its matcher's pre-gated subset
+    of the compact gram table. ``grams`` is unread."""
     return {
-        k: match(grams if compact is None else M.gated_grams(compact, gate),
-                 sentences, gazetteer, ctx)
+        k: match(M.gated_grams(compact, gate), sentences, gazetteer, ctx)
         for k, (gate, _, match) in MENTIONS.items()
-    }
-
-
-def build_context(grams: DataFrame) -> dict[str, DataFrame]:
-    row = X.build_row_ngrams(grams)
-    return {
-        "row": row,
-        "col": X.build_col_ngrams(grams),
-        "row2": X.build_row_spread(row, 2),
-        "row5": X.build_row_spread(row, 5),
     }
 
 
@@ -327,11 +315,12 @@ def _fit_multitask(feats: dict[str, DataFrame]) -> dict[str, DataFrame]:
 def kbc_graph(relations: list[str], gold: bool = False,
               canonicalize: bool = True, default_threshold: float = 0.5,
               supervision: str = "votes",
-              visual_coords: DataFrame | None = None) -> list[Stage | Job]:
+              visual: bool = False) -> list[Stage | Job]:
     """The KBC graph over the external tables ``pages`` and ``gazetteer``
     (plus ``gold`` entities and their per-(relation, dev slice)
-    ``gold_totals`` when ``gold``), in the order ``run_kbc_checkpointed``
-    commits its stages. ``entities_<rel>`` yields ``(thresholded
+    ``gold_totals`` when ``gold``, and the ``visual`` bbox sidecar when
+    ``visual``), in the order ``run_kbc_checkpointed`` commits its
+    stages. ``entities_<rel>`` yields ``(thresholded
     entities, threshold, scores or None)``; the options are ``run_kbc``'s.
 
     The compact gram table and the ce_v_max context tables are built on
@@ -357,7 +346,7 @@ def kbc_graph(relations: list[str], gold: bool = False,
             needs |= {"a_row", "a_col"}
         cands = with_context(
             relation_candidates(rel, {k: t[f"mentions_{k}"] for k in MENTIONS},
-                                c, visual=visual_coords),
+                                c, visual=t.get("visual")),
             t["sentence_context"], c["row"], c["col"], needs=needs,
             extra=({k: t[f"ce_ctx_{k}"] for k in CE_CONTEXT}
                    if rel == "ce_v_max" else None))
@@ -435,7 +424,8 @@ def kbc_graph(relations: list[str], gold: bool = False,
                          lambda t: connected_components(
                              doc_alias_edges(ingest(t["pages"]))).persist()))
     scored_inputs = (tuple(f"mentions_{k}" for k in MENTIONS)
-                     + ("sentence_context", "row_ngrams", "col_ngrams"))
+                     + ("sentence_context", "row_ngrams", "col_ngrams")
+                     + (("visual",) if visual else ()))
     tail_inputs = ((("components",) if canonicalize else ())
                    + (("gold", "gold_totals") if gold else ()))
     for rel in relations:
@@ -495,10 +485,13 @@ def materialize(nodes: list[Stage | Job], tables: dict, mat) -> dict:
 
 def _kbc(pages: DataFrame, gazetteer: DataFrame, gold: DataFrame | None,
          relations: list[str] | None, mat,
+         visual_coords: DataFrame | None = None,
          **options) -> tuple[KBCResult, list[Stage | Job]]:
     """Run ``kbc_graph`` through the materializer ``mat``."""
     relations = relations or ALL_RELATIONS
     tables = {"pages": pages, "gazetteer": gazetteer}
+    if visual_coords is not None:
+        tables["visual"] = visual_coords
     if gold is not None:
         tables["gold"] = gold_entities(gold).persist()
         tables["gold_totals"] = {
@@ -508,7 +501,8 @@ def _kbc(pages: DataFrame, gazetteer: DataFrame, gold: DataFrame | None,
             .groupBy("attribute", "_dev")
             .agg(F.count("*").alias("n")).collect()
         }
-    nodes = kbc_graph(relations, gold=gold is not None, **options)
+    nodes = kbc_graph(relations, gold=gold is not None,
+                      visual=visual_coords is not None, **options)
     t = materialize(nodes, tables, mat)
     finals = {rel: t[f"entities_{rel}"] for rel in relations}
     return KBCResult(
@@ -618,14 +612,22 @@ def run_kbc_checkpointed(spark: SparkSession, pages_path: str,
     (url, position, v_top/v_left/v_bottom/v_right) — same semantics as
     ``run_kbc(visual_coords=...)``."""
     runner = StageRunner(spark, out_dir, resume=resume)
+    # node -> the external tables it reads, itself or through its inputs
+    # (materialize resolves a node's inputs before it calls mat on it)
+    reads: dict[str, set[str]] = {}
 
     with _job_pool(spark) as in_pool:
         # plans are built on this thread: the _once memos are not
         # thread-safe
         def mat(node: Stage | Job, build):
+            reads[node.name] = set().union(
+                *(reads.get(i, {i}) for i in node.inputs))
             if isinstance(node, Job):
                 return in_pool(build)
-            inputs = list(node.inputs)
+            # recorded inputs name the external tables too, so a resume
+            # with or without gold or visual rebuilds what it shapes
+            inputs = list(node.inputs) + sorted(
+                reads[node.name] - set(node.inputs))
             if (done := runner.reopen(node.name, inputs)) is not None:
                 return done
             df = build()

@@ -43,7 +43,8 @@ class StageRunner:
 
     def is_complete(self, stage: str, inputs: list[str] | None = None) -> bool:
         """``_SUCCESS`` and lineage present, and, given ``inputs``, built
-        from exactly those (more relations rebuild ``triples``)."""
+        from exactly those (more relations, or another gold or visual
+        table, rebuild ``triples``)."""
         lineage = self._lineage_path(stage)
         if not (os.path.exists(os.path.join(self._path(stage), "_SUCCESS"))
                 and os.path.exists(lineage)):

@@ -3,23 +3,29 @@
 The north_star pipeline materializes to "resumable Iceberg commit
 snapshots". On a real cluster that's ``df.writeTo(t).append()`` against
 an Iceberg catalog; this module is the same COMMIT PROTOCOL over plain
-parquet + JSON manifests, so every property the pipeline relies on —
-atomic visibility, idempotent micro-batch appends, time travel,
-manifest-level partition pruning, orphan cleanup — exists and is tested
-in-sandbox, and swapping the implementation for a real catalog changes
-no call sites.
+parquet + JSON manifests (atomic visibility, idempotent micro-batch
+appends), and swapping the implementation for a real catalog changes no
+call sites.
 
 Layout of ``<table_dir>``::
 
-    data/<version>-<nonce>/...            one directory per commit
-    snapshots/v<version>.json             immutable manifest chain
+    data/commit=<version>-<nonce>/[<partition_col>=<value>/]part-*.parquet
+    snapshots/v<version>.json      immutable manifest chain
 
-A manifest lists every live data directory (its own + the parent's for
-an append; only its own for an overwrite), each entry carrying its
-partition value when the table is partitioned. Readers resolve the
-highest manifest version and scan exactly the listed directories —
-data directories from uncommitted (crashed) writes are invisible until
-``vacuum()`` removes them.
+Each append is ONE Spark write job into its own ``commit=`` directory
+(``partitionBy(partition_col)`` for a partitioned table; a zero-row
+commit may leave no data file). Each manifest lists every committed
+directory, its parent's plus its own, with the table schema. As in Delta
+Lake and Iceberg, the log lists the files and a read is ONE file scan
+over them: ``read()`` scans exactly the listed directories under
+``data/`` as its base path, so ``commit`` and ``partition_col`` are
+partition columns of that one scan, typed by the stored schema (a
+predicate never turns into a number). ``read().filter(col == value)`` is
+a partition filter, and Spark lists only the matching directories. A
+``commit=`` directory no manifest lists (a writer that crashed before
+publishing) is never scanned. There is no time travel, compaction or
+vacuum: the plan of a read stays one scan however many commits the
+table holds.
 
 Commit atomicity: the manifest is staged to a temp name and published
 with ``os.link`` (hard link), which fails with EEXIST if that version
@@ -28,18 +34,10 @@ the next version number, exactly Iceberg's optimistic-concurrency
 loop. ``os.rename`` would silently clobber on POSIX; ``link`` is the
 single-filesystem primitive that refuses to.
 
-Exactly-once streaming: ``append(df, idempotency_key=...)`` scans the
-manifest chain for the key and becomes a no-op when present, so a
-micro-batch replayed after a crash between two table appends re-commits
-only what's missing — closing the "replayed micro-batch re-appends"
-caveat the plain parquet-append sinks document.
-
-Partitioning: pass ``partition_col`` and appends write one data
-directory PER PARTITION VALUE, recorded in the manifest entry.
-``read(where={col: value})`` then prunes at the MANIFEST, never listing
-the other partitions' files — Iceberg's partition-spec pruning, scaled
-down. (The partition value lives in the directory entry, not the data
-files; readers re-attach it as a literal column.)
+Exactly-once streaming: every manifest entry carries its commit's
+idempotency key, and ``append(df, idempotency_key=...)`` is a no-op when
+the head already lists the key, so a micro-batch replayed after a crash
+between two table appends re-commits only what's missing.
 """
 
 from __future__ import annotations
@@ -49,7 +47,7 @@ import os
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-import pyspark.sql.functions as F
+from pyspark.sql.types import StructType
 
 
 class CommitConflict(RuntimeError):
@@ -67,75 +65,28 @@ class SnapshotTable:
         os.makedirs(self._snap_dir, exist_ok=True)
         os.makedirs(self._data_dir, exist_ok=True)
 
-    # -- manifest chain ----------------------------------------------------
-
-    def versions(self) -> list[int]:
-        out = []
-        for name in os.listdir(self._snap_dir):
-            if name.startswith("v") and name.endswith(".json"):
-                out.append(int(name[1:-5]))
-        return sorted(out)
-
     def current_version(self) -> int:
-        vs = self.versions()
-        return vs[-1] if vs else 0
+        return max((int(name[1:-5]) for name in os.listdir(self._snap_dir)
+                    if name.startswith("v") and name.endswith(".json")),
+                   default=0)
 
     def _manifest(self, version: int) -> dict:
         with open(os.path.join(self._snap_dir, f"v{version}.json")) as f:
             return json.load(f)
 
-    def _keys_seen(self) -> set[str]:
-        keys = set()
-        for v in self.versions():
-            k = self._manifest(v).get("idempotency_key")
-            if k is not None:
-                keys.add(k)
-        return keys
-
-    # -- commits -----------------------------------------------------------
-
-    def _write_data(self, df: DataFrame, version_hint: int) -> list[dict]:
-        nonce = uuid.uuid4().hex[:8]
-        base = os.path.join(self._data_dir, f"{version_hint}-{nonce}")
-        if self.partition_col is None:
-            df.write.mode("overwrite").parquet(base)
-            return [{"path": os.path.relpath(base, self.dir),
-                     "partition": None}]
-        values = [r[0] for r in
-                  df.select(self.partition_col).distinct().collect()]
-        entries = []
-        for val in sorted(map(str, values)):
-            sub = os.path.join(base, f"{self.partition_col}={val}")
-            (df.filter(F.col(self.partition_col).cast("string") == val)
-             .drop(self.partition_col)
-             .write.mode("overwrite").parquet(sub))
-            entries.append({"path": os.path.relpath(sub, self.dir),
-                            "partition": {self.partition_col: val}})
-        return entries
-
-    def _publish(self, manifest: dict, retries: int = 10) -> int:
+    def _publish(self, commit: dict, schema: dict,
+                 retries: int = 10) -> int:
         """Optimistic-concurrency commit: stage, hard-link to v<N>, on
         EEXIST rebase onto the new head and retry."""
         for _ in range(retries):
             version = self.current_version() + 1
-            expect = manifest.get("expect_parent")
-            if expect is not None and version - 1 != expect:
-                raise CommitConflict(
-                    f"conditional replace expected head v{expect}, "
-                    f"found v{version - 1}: {self.dir}")
-            manifest["version"] = version
-            manifest["parent"] = version - 1 or None
-            if manifest["operation"] == "append":
-                parent_entries = (self._manifest(version - 1)["entries"]
-                                  if version > 1 else [])
-                manifest["entries"] = parent_entries + manifest["new_entries"]
-            else:
-                manifest["entries"] = list(manifest["new_entries"])
+            parent = (self._manifest(version - 1)["commits"]
+                      if version > 1 else [])
             tmp = os.path.join(self._snap_dir,
                                f"tmp-{uuid.uuid4().hex}.json")
             with open(tmp, "w") as f:
-                json.dump({k: v for k, v in manifest.items()
-                           if k not in ("new_entries", "expect_parent")},
+                json.dump({"version": version, "parent": version - 1 or None,
+                           "schema": schema, "commits": parent + [commit]},
                           f, indent=2)
             final = os.path.join(self._snap_dir, f"v{version}.json")
             try:
@@ -150,148 +101,32 @@ class SnapshotTable:
                summary: dict | None = None) -> int | None:
         """Commit ``df`` as a new snapshot appended to the current one.
         Returns the committed version, or None when ``idempotency_key``
-        was already committed (the exactly-once replay path: data is
-        written before the key check re-runs inside publish, but a
-        replayed batch short-circuits here before writing)."""
-        if idempotency_key is not None and \
-                idempotency_key in self._keys_seen():
+        was already committed (the exactly-once replay path: a replayed
+        batch short-circuits here before writing)."""
+        v = self.current_version()
+        if idempotency_key is not None and v > 0 and idempotency_key in {
+                c["idempotency_key"] for c in self._manifest(v)["commits"]}:
             return None
-        entries = self._write_data(df, self.current_version() + 1)
-        return self._publish({
-            "operation": "append", "new_entries": entries,
-            "idempotency_key": idempotency_key, "summary": summary or {}})
+        name = f"commit={v + 1}-{uuid.uuid4().hex[:8]}"
+        writer = df.write.mode("errorifexists")
+        if self.partition_col is not None:
+            writer = writer.partitionBy(self.partition_col)
+        writer.parquet(os.path.join(self._data_dir, name))
+        return self._publish(
+            {"dir": name, "idempotency_key": idempotency_key,
+             "summary": summary or {}},
+            json.loads(df.schema.json()))
 
-    def overwrite(self, df: DataFrame, summary: dict | None = None,
-                  expect_version: int | None = None) -> int:
-        """Commit ``df`` as a snapshot REPLACING the table contents
-        (compaction / canonicalize rewrites). Old versions stay
-        readable via time travel until vacuum. ``expect_version`` makes
-        the replace CONDITIONAL (Iceberg's validate-snapshot-id): if the
-        head moved since the caller read it, the commit raises instead
-        of rebasing — a rebased overwrite would silently throw away the
-        concurrent append it replaced."""
-        entries = self._write_data(df, self.current_version() + 1)
-        return self._publish({
-            "operation": "overwrite", "new_entries": entries,
-            "idempotency_key": None, "summary": summary or {},
-            "expect_parent": expect_version})
-
-    # -- reads ---------------------------------------------------------
-
-    def read(self, version: int | None = None,
-             where: dict | None = None) -> DataFrame:
-        """Scan the snapshot's data directories (manifest-pruned by
-        ``where={partition_col: value}`` when given). Raises on an
+    def read(self) -> DataFrame:
+        """One file scan over every committed directory. Raises on an
         empty table — callers gate on current_version() > 0."""
-        v = self.current_version() if version is None else version
-        if v < 1:
-            raise ValueError(f"no snapshots committed yet: {self.dir}")
-        entries = self._manifest(v)["entries"]
-        if where:
-            entries = [e for e in entries
-                       if e["partition"] and all(
-                           e["partition"].get(k) == str(val)
-                           for k, val in where.items())]
-        parts: list[DataFrame] = []
-        for e in entries:
-            d = self.spark.read.parquet(os.path.join(self.dir, e["path"]))
-            if e["partition"]:
-                for k, val in e["partition"].items():
-                    d = d.withColumn(k, F.lit(val))
-            parts.append(d)
-        if not parts:
-            # pruned to nothing: empty frame with the table's schema
-            all_entries = self._manifest(v)["entries"]
-            if not all_entries:
-                raise ValueError(f"snapshot v{v} holds no data: {self.dir}")
-            any_e = all_entries[0]
-            d = self.spark.read.parquet(
-                os.path.join(self.dir, any_e["path"]))
-            if any_e["partition"]:
-                for k, val in any_e["partition"].items():
-                    d = d.withColumn(k, F.lit(val))
-            return d.filter(F.lit(False))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-
-    # -- maintenance -----------------------------------------------------
-
-    def history(self) -> list[dict]:
-        """(version, operation, idempotency_key, summary, n_entries)
-        per committed snapshot, oldest first — the audit surface the
-        per-partition lineage metrics hang off."""
-        out = []
-        for v in self.versions():
-            m = self._manifest(v)
-            out.append({"version": v, "operation": m["operation"],
-                        "idempotency_key": m.get("idempotency_key"),
-                        "summary": m.get("summary", {}),
-                        "n_entries": len(m["entries"])})
-        return out
-
-    def compact(self, min_entries: int = 2) -> int | None:
-        """Rewrite the current contents as ONE data directory per
-        partition value — the small-files maintenance pass a streaming
-        table needs (every micro-batch append adds a manifest entry;
-        a day of 30s batches is 2,880 directories whose per-task open
-        cost eventually dominates the scan). No-op (returns None) when
-        the manifest already lists fewer than ``min_entries`` entries.
-
-        The rewrite commits as a CONDITIONAL overwrite pinned to the
-        version it read (see ``overwrite``): a micro-batch that lands
-        mid-compaction makes the compaction fail with CommitConflict —
-        retryable, never lossy. Old versions remain time-travelable
-        until ``expire_snapshots`` + ``vacuum``."""
         v = self.current_version()
         if v < 1:
-            return None
-        entries = self._manifest(v)["entries"]
-        if len(entries) < min_entries:
-            return None
-        return self.overwrite(
-            self.read(v), expect_version=v,
-            summary={"compaction_of": v,
-                     "entries_before": len(entries)})
-
-    def expire_snapshots(self, keep_last: int = 1) -> list[int]:
-        """Drop the manifests of all but the newest ``keep_last``
-        snapshots (Iceberg's expire-snapshots): time travel to expired
-        versions stops working, and the data directories only they
-        referenced become orphans for the next ``vacuum`` to delete.
-        The head is never expired.
-
-        Retention interacts with exactly-once: idempotency keys live in
-        the manifests, so keys older than the retention are forgotten
-        and a micro-batch replayed from BEFORE the expired window would
-        re-append. Keep ``keep_last`` larger than the maximum possible
-        replay depth (checkpointed streams replay at most the last
-        uncommitted batch, so even keep_last=2 is safe there) — the
-        same contract Iceberg's expire-snapshots has with its own
-        WAP/idempotency metadata."""
-        keep_last = max(1, keep_last)
-        vs = self.versions()
-        expired = vs[:-keep_last]
-        for v in expired:
-            os.unlink(os.path.join(self._snap_dir, f"v{v}.json"))
-        return expired
-
-    def vacuum(self) -> list[str]:
-        """Delete data directories referenced by NO manifest — the
-        debris of commits that crashed between data write and publish
-        (Iceberg's remove-orphan-files)."""
-        import shutil
-        live: set[str] = set()
-        for v in self.versions():
-            for e in self._manifest(v)["entries"]:
-                # top-level commit dir = first path segment under data/
-                rel = os.path.relpath(os.path.join(self.dir, e["path"]),
-                                      self._data_dir)
-                live.add(rel.split(os.sep)[0])
-        removed = []
-        for name in os.listdir(self._data_dir):
-            if name not in live:
-                shutil.rmtree(os.path.join(self._data_dir, name))
-                removed.append(name)
-        return removed
+            raise ValueError(f"no snapshots committed yet: {self.dir}")
+        m = self._manifest(v)
+        schema = StructType.fromJson(m["schema"]).add("commit", "string")
+        return (self.spark.read.schema(schema)
+                .option("basePath", self._data_dir)
+                .parquet(*(os.path.join(self._data_dir, c["dir"])
+                           for c in m["commits"]))
+                .drop("commit"))

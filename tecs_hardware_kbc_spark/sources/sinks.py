@@ -1,7 +1,7 @@
-"""Sinks (SURVEY S6/S7/S9).
+"""Sinks (SURVEY S6/S7/S9). The triple sink, partitioned by predicate,
+is the snapshot table (``plans/snapshots.py``); this module holds the CSV
+sinks:
 
-* triples parquet partitioned by predicate (partition pruning for
-  per-relation consumers);
 * probability CSV (``dump_candidates``, transistors.py:128-135);
 * discrepancy CSV — FP/FN rows with human-readable notes, sorted by score
   desc (``compare_entities`` + ``sort_csv``, transistor_utils.py:29-369).
@@ -13,12 +13,6 @@ from pyspark.sql import DataFrame
 import pyspark.sql.functions as F
 
 from tecs_hardware_kbc_spark.operators.scoring import ENTITY_KEY, confusion
-
-
-def write_triples(triples: DataFrame, path: str,
-                  fmt: str = "parquet") -> None:
-    w = triples.write.mode("overwrite").partitionBy("pred")
-    (w.parquet(path) if fmt == "parquet" else w.format(fmt).save(path))
 
 
 def write_prob_csv(entities: DataFrame, path: str) -> None:

@@ -28,8 +28,11 @@ A recrawl of an already-extracted url is SKIPPED (extract-once
 semantics): triple extraction depends only on page content, and the
 reference corpus's datasheets are immutable once crawled. Re-admitting
 urls whose content moved would require retracting that url's prior
-triples (an Iceberg MERGE / the snapshot table's ``overwrite``; out of
-scope for this append-only loop).
+triples (an Iceberg MERGE); the snapshot tables are append-only, so that
+is out of scope here.
+
+Each wave's anti-join reads the seen table as ONE file scan over every
+committed directory, so its plan does not grow with the stream's age.
 """
 
 from __future__ import annotations

@@ -154,24 +154,15 @@ def test_distractor_scores_below_genuine(spark, tiny_tables):
     """Corpus-level: every part-mismatch distractor candidate (value 75)
     scores strictly below the per-doc genuine CE candidates, and the best
     threshold removes all of them."""
-    from tecs_hardware_kbc_spark.operators import mentions as M
-    from tecs_hardware_kbc_spark.operators.extract import parse_pages
-    from tecs_hardware_kbc_spark.operators.labeling import (
-        RELATION_NEEDS, apply_lfs, build_sentence_context, with_context)
-    from tecs_hardware_kbc_spark.pipeline import (
-        build_ce_context, build_context, extract_mentions,
-        relation_candidates)
+    from tecs_hardware_kbc_spark.pipeline import kbc_graph, materialize
 
-    sentences = parse_pages(tiny_tables["pages"]).localCheckpoint()
-    grams = M.explode_gram_arrays(M.gram_space_compact(sentences))
-    ctx = build_context(grams)
-    extra = build_ce_context(grams)
-    ments = extract_mentions(grams, sentences, tiny_tables["gaz"], ctx)
-    cands = relation_candidates("ce_v_max", ments, ctx)
-    cc = with_context(cands, build_sentence_context(sentences, grams),
-                      ctx["row"], ctx["col"],
-                      needs=RELATION_NEEDS["ce_v_max"], extra=extra)
-    scored = apply_lfs(cc, "ce_v_max").cache()
+    nodes = kbc_graph(["ce_v_max"], canonicalize=False)
+    names = [n.name for n in nodes]
+    t = materialize(nodes[:names.index("scored_ce_v_max") + 1],
+                    {"pages": tiny_tables["pages"],
+                     "gazetteer": tiny_tables["gaz"]},
+                    lambda node, build: build())
+    scored = t["scored_ce_v_max"].cache()
     distract = scored.filter(F.col("a_span") == "75")
     genuine = scored.filter(F.col("a_span") != "75")
     n_distract = distract.count()

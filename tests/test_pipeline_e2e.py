@@ -181,6 +181,26 @@ def test_resume_with_more_relations_rebuilds_triples(spark,
     assert got == digests(batch.triples)
 
 
+def test_resume_without_gold_rebuilds_triples(spark, tmp_path_factory):
+    """The gold-tuned thresholds shape ``triples``: a resume without gold
+    rebuilds it, reuses every stage gold does not reach, and returns the
+    fixed-threshold triples of run_kbc without gold."""
+    base = str(tmp_path_factory.mktemp("kbcgold"))
+    write_corpus(spark, f"{base}/corpus", n_pages=12, seed=5)
+    args = (f"{base}/corpus/pages.parquet", f"{base}/corpus/gazetteer.parquet",
+            f"{base}/out")
+    relations = ["stg_temp_max"]
+    run_kbc_checkpointed(spark, *args, gold_path=f"{base}/corpus/gold.parquet",
+                         relations=relations)
+    resumed = run_kbc_checkpointed(spark, *args, relations=relations)
+    stages = _listed_stages(f"{base}/out")
+    assert [s["stage"] for s in stages if not s.get("skipped")] == ["triples"]
+    batch = run_kbc(spark, *(spark.read.parquet(f"{base}/corpus/{t}.parquet")
+                             for t in ("pages", "gazetteer")),
+                    relations=relations)
+    assert digests(resumed.triples) == digests(batch.triples)
+
+
 @pytest.mark.parametrize("entry", ["run_kbc", "run_kbc_checkpointed"])
 def test_failing_relation_cancels_siblings(spark, tiny_tables, monkeypatch,
                                            tmp_path, entry):

@@ -1,26 +1,9 @@
 """Sinks (S6/S7)."""
 
-import os
-
-import pyspark.sql.functions as F
-
 from tecs_hardware_kbc_spark.sources.sinks import (
     write_discrepancies,
     write_prob_csv,
-    write_triples,
 )
-
-
-def test_triples_sink_partitioned(spark, tmp_path):
-    triples = spark.createDataFrame(
-        [("D#P", "polarity", "NPN", 0.9), ("D", "typ_gbp", "1100", 0.8)],
-        "subj string, pred string, obj string, prob double")
-    out = str(tmp_path / "triples")
-    write_triples(triples, out)
-    dirs = os.listdir(out)
-    assert "pred=polarity" in dirs and "pred=typ_gbp" in dirs
-    back = spark.read.parquet(out)
-    assert back.count() == 2
 
 
 def test_prob_csv_sorted_desc(spark, tmp_path):

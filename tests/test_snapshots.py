@@ -1,9 +1,11 @@
 """Snapshot-table commit protocol: atomic visibility, idempotent
-appends, time travel, manifest partition pruning, orphan vacuum."""
+appends, one file scan per read, partition pruning by Spark."""
 
+import glob
 import json
 import os
 
+import pyspark.sql.functions as F
 import pytest
 
 from tecs_hardware_kbc_spark.plans.snapshots import SnapshotTable
@@ -11,6 +13,18 @@ from tecs_hardware_kbc_spark.plans.snapshots import SnapshotTable
 
 def _df(spark, rows):
     return spark.createDataFrame(rows, "id long, pred string, val string")
+
+
+def _file_scans(df) -> int:
+    return df._jdf.queryExecution().executedPlan().toString().count(
+        "FileScan")
+
+
+def _files_read(df) -> int:
+    """The "number of files read" of the one scan that ``df`` ran
+    (``inputFiles()`` lists the whole index of a path-based read)."""
+    scan = df._jdf.queryExecution().executedPlan().collectLeaves().apply(0)
+    return scan.metrics().apply("numFiles").value()
 
 
 def test_append_read_time_travel(spark, tmp_path_factory):
@@ -22,7 +36,6 @@ def test_append_read_time_travel(spark, tmp_path_factory):
     v2 = t.append(_df(spark, [(2, "b", "y")]))
     assert (v1, v2) == (1, 2)
     assert {r["id"] for r in t.read().collect()} == {1, 2}
-    assert {r["id"] for r in t.read(version=1).collect()} == {1}
 
 
 def test_idempotent_append_skips_replay(spark, tmp_path_factory):
@@ -34,29 +47,54 @@ def test_idempotent_append_skips_replay(spark, tmp_path_factory):
     assert t.append(_df(spark, [(2, "a", "x")]), "batch-1") == 2
 
 
-def test_overwrite_replaces_but_history_survives(spark, tmp_path_factory):
-    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"))
-    t.append(_df(spark, [(1, "a", "x"), (2, "b", "y")]))
-    t.overwrite(_df(spark, [(9, "c", "z")]))
-    assert [r["id"] for r in t.read().collect()] == [9]
-    assert {r["id"] for r in t.read(version=1).collect()} == {1, 2}
-
-
 def test_partition_pruning_at_the_manifest(spark, tmp_path_factory):
+    """A filter on the partition column prunes the one scan to that
+    partition's directories; the column keeps its stored string type."""
     t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"),
                       partition_col="pred")
     t.append(_df(spark, [(1, "a", "x"), (2, "b", "y"), (3, "a", "z")]))
-    t.append(_df(spark, [(4, "b", "w")]))
-    got = t.read(where={"pred": "a"})
-    assert {r["id"] for r in got.collect()} == {1, 3}
-    assert all(r["pred"] == "a" for r in got.collect())
-    # the scan plan touches ONLY pred=a directories (manifest pruning)
-    files = got.inputFiles()
-    assert files and all("pred=a" in f for f in files)
-    # pruning to a missing value yields an empty, schema-stable frame
-    empty = t.read(where={"pred": "zz"})
+    t.append(_df(spark, [(4, "b", "w"), (5, "7", "v")]))
+    got = t.read().filter(F.col("pred") == "a")
+    rows = got.collect()
+    assert {r["id"] for r in rows} == {1, 3}
+    assert all(r["pred"] == "a" for r in rows)
+    # the scan opened exactly the pred=a files
+    assert _files_read(got) == len(glob.glob(f"{t.dir}/data/*/pred=a/*"
+                                             ".parquet")) > 0
+    assert dict(t.read().dtypes)["pred"] == "string"
+    empty = t.read().filter(F.col("pred") == "zz")
     assert empty.count() == 0
     assert set(empty.columns) == {"id", "pred", "val"}
+
+
+def test_read_is_one_file_scan_over_many_commits(spark, tmp_path_factory):
+    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"),
+                      partition_col="pred")
+    row = _df(spark, [(0, "a", "x")]).coalesce(1).localCheckpoint()
+    for i in range(200):
+        t.append(row, idempotency_key=f"batch-{i}")
+    got = t.read()
+    assert _file_scans(got) == 1
+    assert got.count() == 200
+
+
+def test_uncommitted_directory_is_invisible(spark, tmp_path_factory):
+    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"),
+                      partition_col="pred")
+    t.append(_df(spark, [(1, "a", "x")]))
+    # a writer that crashed between its data write and its publish
+    (_df(spark, [(7, "a", "q")]).write.partitionBy("pred")
+     .parquet(os.path.join(t._data_dir, "commit=2-deadbeef")))
+    assert [r["id"] for r in t.read().collect()] == [1]
+
+
+def test_zero_row_append_reads_back_empty(spark, tmp_path_factory):
+    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"),
+                      partition_col="pred")
+    assert t.append(_df(spark, []), idempotency_key="batch-0") == 1
+    got = t.read()
+    assert got.count() == 0
+    assert set(got.columns) == {"id", "pred", "val"}
 
 
 def test_commit_conflict_rebases_to_next_version(spark, tmp_path_factory):
@@ -65,79 +103,7 @@ def test_commit_conflict_rebases_to_next_version(spark, tmp_path_factory):
     # a concurrent writer steals version 2 between head read and publish
     stolen = os.path.join(t._snap_dir, "v2.json")
     with open(stolen, "w") as f:
-        json.dump({"version": 2, "parent": 1, "operation": "append",
-                   "idempotency_key": None, "summary": {},
-                   "entries": t._manifest(1)["entries"]}, f)
+        json.dump({**t._manifest(1), "version": 2, "parent": 1}, f)
     v = t.append(_df(spark, [(2, "b", "y")]))
     assert v == 3
     assert {r["id"] for r in t.read().collect()} == {1, 2}
-
-
-def test_vacuum_removes_orphans_only(spark, tmp_path_factory):
-    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"))
-    t.append(_df(spark, [(1, "a", "x")]))
-    # simulate a crash between data write and manifest publish
-    orphan = os.path.join(t._data_dir, "99-deadbeef")
-    _df(spark, [(7, "z", "q")]).write.parquet(orphan)
-    removed = t.vacuum()
-    assert removed == ["99-deadbeef"]
-    assert not os.path.exists(orphan)
-    assert t.read().count() == 1
-
-
-def test_compact_merges_entries_and_preserves_rows(spark,
-                                                   tmp_path_factory):
-    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"),
-                      partition_col="pred")
-    for i in range(4):                      # 4 micro-batch appends
-        t.append(_df(spark, [(i, "a" if i % 2 else "b", "x%d" % i)]))
-    before = t._manifest(t.current_version())["entries"]
-    assert len(before) == 4
-    v = t.compact()
-    assert v == 5
-    after = t._manifest(v)["entries"]
-    assert len(after) == 2                  # one dir per partition value
-    assert {r["id"] for r in t.read().collect()} == {0, 1, 2, 3}
-    # manifest pruning still works after the rewrite
-    assert {r["id"] for r in t.read(where={"pred": "a"}).collect()} \
-        == {1, 3}
-    # history records the rewrite
-    ops = [h["operation"] for h in t.history()]
-    assert ops == ["append"] * 4 + ["overwrite"]
-    assert t.history()[-1]["summary"]["compaction_of"] == 4
-
-
-def test_compact_noop_below_threshold(spark, tmp_path_factory):
-    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"))
-    assert t.compact() is None              # empty table
-    t.append(_df(spark, [(1, "a", "x")]))
-    assert t.compact() is None              # single entry already
-    assert t.current_version() == 1
-
-
-def test_conditional_replace_refuses_to_drop_concurrent_append(
-        spark, tmp_path_factory):
-    from tecs_hardware_kbc_spark.plans.snapshots import CommitConflict
-    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"))
-    t.append(_df(spark, [(1, "a", "x")]))
-    t.append(_df(spark, [(2, "b", "y")]))
-    snapshot = t.read(2)
-    t.append(_df(spark, [(3, "c", "z")]))   # lands mid-"compaction"
-    with pytest.raises(CommitConflict):
-        t.overwrite(snapshot, expect_version=2)
-    # nothing was lost
-    assert {r["id"] for r in t.read().collect()} == {1, 2, 3}
-
-
-def test_expire_snapshots_then_vacuum(spark, tmp_path_factory):
-    t = SnapshotTable(spark, str(tmp_path_factory.mktemp("snap") / "t"))
-    for i in range(3):
-        t.append(_df(spark, [(i, "a", "x")]))
-    t.compact()
-    assert t.expire_snapshots(keep_last=1) == [1, 2, 3]
-    assert t.versions() == [4]
-    removed = t.vacuum()                    # pre-compaction dirs orphaned
-    assert len(removed) == 3
-    assert {r["id"] for r in t.read().collect()} == {0, 1, 2}
-    # the head can never be expired
-    assert t.expire_snapshots(keep_last=1) == []
