@@ -6,15 +6,20 @@ declared ONCE here, by ``kbc_graph``: a list of named nodes, each with the
 names of its inputs and a build function; Catalyst plans each one. Two
 materializers run that one graph. Both build every stage's plan on the
 calling thread and run the Spark jobs in one 3-wide, job-tagged thread
-pool (``_job_pool``), each node as soon as its inputs are ready, so
-independent stages and the per-relation tails overlap:
+pool (``_job_pool``, each job described by its node's name), each node as
+soon as its inputs are ready, so independent stages, the gold counts and
+the per-relation tails overlap:
 
 * ``run_kbc`` (in memory: tests, ``__spark_entry__``, streaming)
+  builds only the nodes ``triples`` reaches through their inputs, and
   ``localCheckpoint``s the pinned stages;
 * ``run_kbc_checkpointed`` (bench + cluster runs) commits every stage as
   a resumable parquet table with lineage (``plans.lineage.StageRunner``),
   and lists them in declared order in ``metrics.json``; a resumed run
-  re-opens every complete stage without building its plan.
+  re-opens every complete stage, with the schema its lineage records,
+  without building its plan.
+
+Either call releases the gold entities and alias components it cached.
 
 Differences that matter at scale:
 
@@ -90,6 +95,13 @@ CONTEXT_STAGES = {"row": "row_ngrams", "col": "col_ngrams",
                   "ncell": "neighbor_cells"}
 # the ce_v_max-only context tables (build_ce_context), one stage each
 CE_CONTEXT = ("rowhead", "colhead", "row_parts", "col_parts", "row_nnum")
+# relation -> the MENTIONS tables its candidates read: a binary relation
+# pairs the part mentions with its own, a unary one reads one table
+RELATION_MENTIONS = {
+    **{rel: ("part", rel) for rel in BINARY_RELATIONS},
+    "typ_gbp": ("gain",),
+    "typ_supply_current": ("current",),
+}
 # mention table -> (gram pre-gate, tables its matcher reads besides the
 # sentences, matcher(grams, sentences, gazetteer, ctx)). With the compact
 # gram table, each matcher explodes only its pre-gated gram subset
@@ -196,24 +208,17 @@ def build_ce_context(grams: DataFrame) -> dict[str, DataFrame]:
 def relation_candidates(rel: str, mentions: dict[str, DataFrame],
                         ctx: dict[str, DataFrame],
                         visual: DataFrame | None = None) -> DataFrame:
-    parts = mentions["part"]
-    if rel == "stg_temp_min":
-        return C.stg_temp_candidates(parts, mentions["stg_temp_min"],
-                                     visual=visual)
-    if rel == "stg_temp_max":
-        return C.stg_temp_candidates(parts, mentions["stg_temp_max"],
-                                     visual=visual)
+    """``mentions`` holds at least the ``RELATION_MENTIONS`` of ``rel``."""
+    if rel in UNARY_RELATIONS:
+        (key,) = RELATION_MENTIONS[rel]
+        return C.unary_candidates(mentions[key])
+    parts, own = (mentions[k] for k in RELATION_MENTIONS[rel])
+    if rel in ("stg_temp_min", "stg_temp_max"):
+        return C.stg_temp_candidates(parts, own, visual=visual)
     if rel == "polarity":
-        return C.polarity_candidates(parts, mentions["polarity"], ctx["row"],
-                                     visual=visual)
-    if rel == "ce_v_max":
-        return C.ce_v_max_candidates(parts, mentions["ce_v_max"],
-                                     ctx["row"], ctx["col"], visual=visual)
-    if rel == "typ_gbp":
-        return C.unary_candidates(mentions["gain"])
-    if rel == "typ_supply_current":
-        return C.unary_candidates(mentions["current"])
-    raise ValueError(rel)
+        return C.polarity_candidates(parts, own, ctx["row"], visual=visual)
+    return C.ce_v_max_candidates(parts, own, ctx["row"], ctx["col"],
+                                 visual=visual)
 
 
 def relation_entities(rel: str, scored: DataFrame,
@@ -312,16 +317,26 @@ def _fit_multitask(feats: dict[str, DataFrame]) -> dict[str, DataFrame]:
     return out
 
 
+def _gold_totals(gold: DataFrame) -> dict[tuple[str, bool], int]:
+    """(attribute, on the dev doc slice) -> gold entity count."""
+    return {
+        (r["attribute"], r["_dev"]): r["n"]
+        for r in gold.withColumn("_dev", is_dev_doc(F.col("doc")))
+        .groupBy("attribute", "_dev").agg(F.count("*").alias("n")).collect()
+    }
+
+
 def kbc_graph(relations: list[str], gold: bool = False,
               canonicalize: bool = True, default_threshold: float = 0.5,
               supervision: str = "votes",
               visual: bool = False) -> list[Stage | Job]:
     """The KBC graph over the external tables ``pages`` and ``gazetteer``
-    (plus ``gold`` entities and their per-(relation, dev slice)
-    ``gold_totals`` when ``gold``, and the ``visual`` bbox sidecar when
-    ``visual``), in the order ``run_kbc_checkpointed`` commits its
-    stages. ``entities_<rel>`` yields ``(thresholded
-    entities, threshold, scores or None)``; the options are ``run_kbc``'s.
+    (plus the ``gold`` entities when ``gold``, and the ``visual`` bbox
+    sidecar when ``visual``), in the order ``run_kbc_checkpointed``
+    commits its stages. With ``gold``, the ``gold_totals`` node counts the
+    gold entities per (relation, dev slice) beside the parse.
+    ``entities_<rel>`` yields ``(thresholded entities, threshold, scores
+    or None)``; the options are ``run_kbc``'s.
 
     The compact gram table and the ce_v_max context tables are built on
     first use, so a resumed checkpointed run, which builds no stage plan,
@@ -345,8 +360,9 @@ def kbc_graph(relations: list[str], gold: bool = False,
             # the feature layer reads the same context arrays the LFs do
             needs |= {"a_row", "a_col"}
         cands = with_context(
-            relation_candidates(rel, {k: t[f"mentions_{k}"] for k in MENTIONS},
-                                c, visual=t.get("visual")),
+            relation_candidates(
+                rel, {k: t[f"mentions_{k}"] for k in RELATION_MENTIONS[rel]},
+                c, visual=t.get("visual")),
             t["sentence_context"], c["row"], c["col"], needs=needs,
             extra=({k: t[f"ce_ctx_{k}"] for k in CE_CONTEXT}
                    if rel == "ce_v_max" else None))
@@ -387,6 +403,11 @@ def kbc_graph(relations: list[str], gold: bool = False,
     nodes: list[Stage | Job] = [
         Stage("sentences", ("pages",),
               lambda t: parse_pages(ingest(t["pages"]))),
+    ]
+    if gold:
+        nodes.append(Job("gold_totals", ("gold",),
+                         lambda t: _gold_totals(t["gold"])))
+    nodes += [
         # the exploded view over the compact gram arrays: pinning it would
         # re-inflate the compact cache 25x, whereas as a parquet stage
         # dictionary/RLE encoding collapses the repeated context columns
@@ -423,16 +444,17 @@ def kbc_graph(relations: list[str], gold: bool = False,
         nodes.append(Job("components", ("pages", "sentences"),
                          lambda t: connected_components(
                              doc_alias_edges(ingest(t["pages"]))).persist()))
-    scored_inputs = (tuple(f"mentions_{k}" for k in MENTIONS)
-                     + ("sentence_context", "row_ngrams", "col_ngrams")
+    scored_inputs = (("sentence_context", "row_ngrams", "col_ngrams")
                      + (("visual",) if visual else ()))
     tail_inputs = ((("components",) if canonicalize else ())
                    + (("gold", "gold_totals") if gold else ()))
     for rel in relations:
         nodes.append(Stage(
             f"scored_{rel}",
-            scored_inputs + (tuple(f"ce_ctx_{k}" for k in CE_CONTEXT)
-                             if rel == "ce_v_max" else ()),
+            tuple(f"mentions_{k}" for k in RELATION_MENTIONS[rel])
+            + scored_inputs
+            + (tuple(f"ce_ctx_{k}" for k in CE_CONTEXT)
+               if rel == "ce_v_max" else ()),
             partial(score, rel=rel), pin=multitask))
         nodes.append(Job(
             f"entities_{rel}",
@@ -455,12 +477,22 @@ def kbc_graph(relations: list[str], gold: bool = False,
     return nodes
 
 
-def materialize(nodes: list[Stage | Job], tables: dict, mat) -> dict:
-    """Resolve every node into a copy of ``tables`` (the external inputs):
-    each node as soon as its inputs are resolved, in declared order.
-    ``mat(node, thunk)`` returns the node's value, or a Future of it."""
-    t = dict(tables)
-    pending, running = list(nodes), {}
+def materialize(nodes: list[Stage | Job], t: dict, mat,
+                targets: list[str]) -> dict:
+    """Resolve the nodes that ``targets`` reach through their inputs into
+    ``t``, which holds the external inputs, and return it: each node as
+    soon as its inputs are resolved, in declared order. No other node is
+    built. ``mat(node, thunk)`` returns the node's value, or a Future of
+    it."""
+    by_name = {n.name: n for n in nodes}
+    reached, stack = set(), list(targets)
+    while stack:
+        name = stack.pop()
+        if name in by_name and name not in reached:
+            reached.add(name)
+            stack.extend(by_name[name].inputs)
+    pending = [n for n in nodes if n.name in reached]
+    running = {}
     while pending or running:
         blocked = []
         for node in pending:
@@ -484,26 +516,30 @@ def materialize(nodes: list[Stage | Job], tables: dict, mat) -> dict:
 
 
 def _kbc(pages: DataFrame, gazetteer: DataFrame, gold: DataFrame | None,
-         relations: list[str] | None, mat,
+         relations: list[str] | None, mat, every_stage: bool,
          visual_coords: DataFrame | None = None,
          **options) -> tuple[KBCResult, list[Stage | Job]]:
-    """Run ``kbc_graph`` through the materializer ``mat``."""
+    """Run ``kbc_graph`` through the materializer ``mat``, building what
+    ``triples`` reaches, or with ``every_stage`` every stage, read or
+    not."""
     relations = relations or ALL_RELATIONS
-    tables = {"pages": pages, "gazetteer": gazetteer}
+    t = {"pages": pages, "gazetteer": gazetteer}
     if visual_coords is not None:
-        tables["visual"] = visual_coords
+        t["visual"] = visual_coords
     if gold is not None:
-        tables["gold"] = gold_entities(gold).persist()
-        tables["gold_totals"] = {
-            (r["attribute"], r["_dev"]): r["n"]
-            for r in tables["gold"]
-            .withColumn("_dev", is_dev_doc(F.col("doc")))
-            .groupBy("attribute", "_dev")
-            .agg(F.count("*").alias("n")).collect()
-        }
+        t["gold"] = gold_entities(gold).persist()
     nodes = kbc_graph(relations, gold=gold is not None,
                       visual=visual_coords is not None, **options)
-    t = materialize(nodes, tables, mat)
+    try:
+        materialize(nodes, t, mat,
+                    [n.name for n in nodes if isinstance(n, Stage)]
+                    if every_stage else ["triples"])
+    finally:
+        # once materialize returns no reader is left (the entities are
+        # localCheckpointed); on an error the pool cancels the rest
+        for name in ("gold", "components"):
+            if name in t:
+                t[name].unpersist()
     finals = {rel: t[f"entities_{rel}"] for rel in relations}
     return KBCResult(
         triples=t["triples"],
@@ -515,12 +551,13 @@ def _kbc(pages: DataFrame, gazetteer: DataFrame, gold: DataFrame | None,
 
 @contextmanager
 def _job_pool(spark: SparkSession):
-    """Yields ``submit(fn) -> Future``, which runs ``fn`` in a 3-wide pool
-    with its Spark jobs tagged for this call. Overlapping jobs hides
-    per-stage scheduling latency: 3 was the sweet spot at 8 and 32 cores,
-    8 doubled wall time on 8 cores. If the body raises, the error is
-    re-raised once every call has stopped: queued calls never start, and
-    the jobs of running ones are cancelled."""
+    """Yields ``submit(name, fn) -> Future``, which runs ``fn`` in a 3-wide
+    pool with its Spark jobs tagged for this call and described by
+    ``name``. Overlapping jobs hides per-stage scheduling latency: 3 was
+    the sweet spot at 8 and 32 cores, 8 doubled wall time on 8 cores. If
+    the body raises, the error is re-raised once every call has stopped:
+    queued calls never start, and the jobs of running ones are
+    cancelled."""
     sc = spark.sparkContext
     # job tags are thread-local and, unlike job groups, leave a caller's
     # group alone
@@ -528,12 +565,14 @@ def _job_pool(spark: SparkSession):
     pool = ThreadPoolExecutor(max_workers=3)
     submitted: list[Future] = []
 
-    def submit(fn) -> Future:
+    def submit(name: str, fn) -> Future:
         def tagged():
             sc.addJobTag(tag)
+            sc.setJobDescription(name)
             try:
                 return fn()
             finally:
+                sc.setJobDescription(None)
                 sc.removeJobTag(tag)
         submitted.append(pool.submit(tagged))
         return submitted[-1]
@@ -588,11 +627,12 @@ def run_kbc(
     with _job_pool(spark) as in_pool:
         def mat(node: Stage | Job, build):
             if isinstance(node, Job):
-                return in_pool(build)
+                return in_pool(node.name, build)
             df = build()
-            return in_pool(df.localCheckpoint) if node.pin else df
+            return in_pool(node.name, df.localCheckpoint) if node.pin else df
 
         return _kbc(pages, gazetteer, gold, relations, mat,
+                    every_stage=False,
                     canonicalize=canonicalize,
                     default_threshold=default_threshold,
                     supervision=supervision, visual_coords=visual_coords)[0]
@@ -623,7 +663,7 @@ def run_kbc_checkpointed(spark: SparkSession, pages_path: str,
             reads[node.name] = set().union(
                 *(reads.get(i, {i}) for i in node.inputs))
             if isinstance(node, Job):
-                return in_pool(build)
+                return in_pool(node.name, build)
             # recorded inputs name the external tables too, so a resume
             # with or without gold or visual rebuilds what it shapes
             inputs = list(node.inputs) + sorted(
@@ -631,14 +671,16 @@ def run_kbc_checkpointed(spark: SparkSession, pages_path: str,
             if (done := runner.reopen(node.name, inputs)) is not None:
                 return done
             df = build()
-            return in_pool(partial(runner.run, node.name, lambda: df, inputs,
-                                   list(node.partition_by)))
+            return in_pool(node.name, partial(
+                runner.run, node.name, lambda: df, inputs,
+                list(node.partition_by)))
 
         result, nodes = _kbc(
             spark.read.parquet(pages_path), spark.read.parquet(gazetteer_path),
             spark.read.parquet(gold_path) if gold_path else None, relations,
-            mat, visual_coords=(spark.read.parquet(visual_path)
-                                if visual_path else None))
+            mat, every_stage=True,
+            visual_coords=(spark.read.parquet(visual_path)
+                           if visual_path else None))
     declared = [n.name for n in nodes]
     runner.metrics.sort(key=lambda m: declared.index(m["stage"]))
     runner.flush_metrics({"scores": result.scores,

@@ -156,12 +156,10 @@ def test_distractor_scores_below_genuine(spark, tiny_tables):
     threshold removes all of them."""
     from tecs_hardware_kbc_spark.pipeline import kbc_graph, materialize
 
-    nodes = kbc_graph(["ce_v_max"], canonicalize=False)
-    names = [n.name for n in nodes]
-    t = materialize(nodes[:names.index("scored_ce_v_max") + 1],
+    t = materialize(kbc_graph(["ce_v_max"], canonicalize=False),
                     {"pages": tiny_tables["pages"],
                      "gazetteer": tiny_tables["gaz"]},
-                    lambda node, build: build())
+                    lambda node, build: build(), ["scored_ce_v_max"])
     scored = t["scored_ce_v_max"].cache()
     distract = scored.filter(F.col("a_span") == "75")
     genuine = scored.filter(F.col("a_span") != "75")

@@ -19,6 +19,7 @@ from tecs_hardware_kbc_spark.pipeline import (
     run_kbc,
     run_kbc_checkpointed,
 )
+from tecs_hardware_kbc_spark.plans.lineage import StageRunner
 
 
 def digests(triples) -> dict[str, str]:
@@ -151,6 +152,36 @@ def test_checkpoint_resume(spark, tmp_path_factory):
         assert sum(lin["partition_rows"].values()) == lin["rows"], stage
         assert lin["partitions"] >= lin["partition_skew"]["n_partitions"], \
             stage
+
+
+def test_stage_schemas_are_the_parquet_schemas(spark, tmp_path_factory,
+                                               monkeypatch):
+    """Every stage table a checkpointed call returns, written or re-opened,
+    has the schema a parquet scan of it infers, the partitioned
+    ``triples`` too, although no scan infers it."""
+    base = str(tmp_path_factory.mktemp("kbcschema"))
+    write_corpus(spark, f"{base}/corpus", n_pages=12, seed=5)
+    returned: dict[str, list] = {}
+    for method in ("run", "reopen"):
+        def wrapped(self, stage, *args, _method=getattr(StageRunner, method),
+                    **kwargs):
+            out = _method(self, stage, *args, **kwargs)
+            if out is not None:
+                returned.setdefault(stage, []).append(out.schema)
+            return out
+        monkeypatch.setattr(StageRunner, method, wrapped)
+    for _ in range(2):
+        run_kbc_checkpointed(spark, f"{base}/corpus/pages.parquet",
+                             f"{base}/corpus/gazetteer.parquet",
+                             f"{base}/out")
+    assert all(s.get("skipped") for s in _listed_stages(f"{base}/out"))
+    declared = _declared_stages(ALL_RELATIONS)
+    assert set(returned) == set(declared)
+    for stage in declared:
+        inferred = spark.read.parquet(f"{base}/out/{stage}").schema
+        # the fresh commit and the resumed re-open
+        assert len(returned[stage]) >= 2, stage
+        assert all(s == inferred for s in returned[stage]), stage
 
 
 def test_resume_with_more_relations_rebuilds_triples(spark,
